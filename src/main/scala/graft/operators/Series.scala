@@ -125,16 +125,22 @@ object Series {
       .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
       .select(col("k"), explode(sequence(col("h0"), col("h1"))).as("h"))
     val g = spine.join(obs, Seq("k", "h"), "left")
+    // Both lookups are running frames (unboundedPreceding → currentRow),
+    // one pass per partition. The next observation is the last non-null
+    // of the DESCENDING-h running frame, which holds exactly the hours
+    // ≥ h since (k, h) is unique; a (currentRow, unboundedFollowing)
+    // frame is re-scanned per row, quadratic in a key's span.
     val back = Window.partitionBy(col("k")).orderBy(col("h"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fwd = Window.partitionBy(col("k")).orderBy(col("h"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val fwd = Window.partitionBy(col("k")).orderBy(col("h").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val hImg = when(col("cents").isNotNull, col("h"))
-    val filled = g
-      .withColumn("pv", last(col("cents"), ignoreNulls = true).over(back))
-      .withColumn("ph", last(hImg, ignoreNulls = true).over(back))
-      .withColumn("nv", first(col("cents"), ignoreNulls = true).over(fwd))
-      .withColumn("nh", first(hImg, ignoreNulls = true).over(fwd))
+    // one select, so each frame is one Window operator over one sort
+    val filled = g.select(col("*"),
+      last(col("cents"), ignoreNulls = true).over(back).as("pv"),
+      last(hImg, ignoreNulls = true).over(back).as("ph"),
+      last(col("cents"), ignoreNulls = true).over(fwd).as("nv"),
+      last(hImg, ignoreNulls = true).over(fwd).as("nh"))
     filled.select(col("k").as(keyCol), col("h").as("hour_id"),
       when(col("cents").isNotNull, col("cents"))
         .otherwise(expr("(pv * (nh - h) + nv * (h - ph)) div (nh - ph)"))

@@ -1,7 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Testdata table access (TESTDATA.md / FIXTURES.md).
   *
@@ -10,11 +12,61 @@ import org.apache.spark.sql.functions._
   * all apply — the Spark-native equivalent of oamap's lazy per-column
   * backend fetch (`oamap/generator.py::Cache`, public repo — see SURVEY.md
   * provenance notice).
+  *
+  * Schema once per path: like oamap, which reads a dataset's schema once
+  * and builds its generator from it (`oamap/generator.py::Generator`),
+  * [[t]] infers each file's Parquet schema once per process and reads it
+  * with that schema afterwards. Inference runs a footer-read Spark job on
+  * every plain `spark.read.parquet`; a read with a given schema runs none.
+  * The memo holds the `StructType`, never a DataFrame: every [[t]] call
+  * builds a fresh relation with fresh attribute ids, so both sides of a
+  * self-join stay distinguishable (`Graph.pageRankNano`'s
+  * `withDeg("src") === rank("node")`). The memo is keyed by
+  *   - the qualified path,
+  *   - the file's length and modification time (one `getFileStatus`), so
+  *     a rewrite that replaces the path re-infers, and
+  *   - the SQL confs that change Parquet inference (`inferenceConfs`).
+  * An in-place edit that keeps a directory's length and mtime is not
+  * seen; the testdata files are single read-only files.
   */
 object Tables {
 
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** The SQL confs whose values change the schema Parquet inference
+    * returns for the same file — part of the schema memo key. */
+  private val inferenceConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private final case class Inferred(len: Long, mtime: Long, schema: StructType)
+
+  /** (qualified path, inference conf values) → the schema inferred from
+    * the file as it was at (len, mtime). A rewrite replaces its path's
+    * entry, so the map holds one entry per path and conf setting. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[Option[String]]), Inferred]()
+
+  /** `spark.read.parquet(path)` with the schema inferred at most once per
+    * memo key (see the object doc). */
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val key = (st.getPath.toString, inferenceConfs.map(spark.conf.getOption))
+    val schema = Option(schemas.get(key))
+      .filter(e => e.len == st.getLen && e.mtime == st.getModificationTime)
+      .map(_.schema)
+      .getOrElse {
+        val inferred = spark.read.parquet(path).schema
+        schemas.put(key, Inferred(st.getLen, st.getModificationTime, inferred))
+        inferred
+      }
+    spark.read.schema(schema).parquet(path)
+  }
 
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {
@@ -26,9 +78,9 @@ object Tables {
       // downstream query (and the DuckDB oracle, which reads the same
       // naive micros) sees identical instants — session tz is pinned UTC.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeEventsTs(spark.read.parquet(s"$sfDir/$name.parquet"))
+      normalizeEventsTs(parquet(spark, s"$sfDir/$name.parquet"))
     } else {
-      spark.read.parquet(s"$sfDir/$name.parquet")
+      parquet(spark, s"$sfDir/$name.parquet")
     }
 
   /** Normalize the events `ts` column to TimestampType regardless of the

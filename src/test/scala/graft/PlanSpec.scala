@@ -1314,6 +1314,19 @@ class PlanSpec extends SparkSpec {
     assert(liScans <= 5, s"each table once (no correlated rescan), got $liScans scans:\n$plan")
   }
 
+  test("b70 interpolation has no (currentRow, unboundedFollowing) row frame") {
+    import org.apache.spark.sql.catalyst.expressions.{CurrentRow, RowFrame,
+      SpecifiedWindowFrame, UnboundedFollowing}
+    // Spark re-scans such a frame once per row: quadratic in a key's span
+    val analyzed = SparkEntry.queries("b70_interpolate")(spark, sf).queryExecution.analyzed
+    val frames = analyzed.flatMap(_.expressions.flatMap(_.collect {
+      case f: SpecifiedWindowFrame => f
+    }))
+    assert(frames.nonEmpty, s"b70's window frames went missing:\n$analyzed")
+    assert(!frames.contains(SpecifiedWindowFrame(RowFrame, CurrentRow, UnboundedFollowing)),
+      s"quadratic frame in b70:\n$analyzed")
+  }
+
   test("no query in the declared inventory collects to the driver") {
     // structural check: building every DataFrame must not trigger an action
     // (any collect-based operator would run here); constructing the plans on
