@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.operators.Sessions
 
 object Bench {
 
@@ -150,15 +150,31 @@ object Bench {
       passes, passSums.toSeq, passEnds.toSeq, retimed.toSeq)
   }
 
+  /** The one per-query stdout line, keyed by id prefix (a01.., b01..):
+    * failed keys (-1) first, then the costliest, cut before the line would
+    * pass `maxChars`. `"n"` is the number of keys run; the full per-key map
+    * is the `queries_sec` ledger line. */
+  def perQueryLine(results: Seq[(String, Double)], maxChars: Int = 1024): String = {
+    val head = """{"per_query_sec":{"""
+    val tail = s"""},"n":${results.size}}"""
+    val entries = results
+      .sortBy { case (_, v) => if (v < 0) Double.MinValue else -v }
+      .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" +
+        "%.2f".formatLocal(java.util.Locale.ROOT, v) }
+    // each entry costs its length plus one separator; the first has none
+    val budget = maxChars - head.length - tail.length + 1
+    val ends = entries.scanLeft(0)(_ + _.length + 1).tail
+    val kept = entries.zip(ends).takeWhile(_._2 <= budget).map(_._1)
+    kept.mkString(head, ",", tail)
+  }
+
+  /** Usage: runMain graft.Bench [<prefix> ...] — no prefixes = every key;
+    * the scale factor comes from `SPARK_GRAFT_SF_DIR`. */
   def main(args: Array[String]): Unit = {
+    val names = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.envCpus
+    val spark = Sessions.local(cpus)
     // wall budget for the WHOLE main (default 25 min), clock started before
     // the warmup — the warmup is several minutes of the wall the harness
     // sees, so a budget that excluded it could still let the timed work blow
@@ -189,7 +205,7 @@ object Bench {
       graft.sources.Tables.all.foreach(n =>
         graft.sources.Tables.t(spark, sfDir, n).limit(1).count())
     } catch { case _: Throwable => () }
-    // Steady-state warmup: run every query once at the SMALLEST sf
+    // Steady-state warmup: run every selected query once at the SMALLEST sf
     // (untimed). Measured on this box, the first execution of each query
     // family pays 0.5–1.5 s of Janino compilation + C2 JIT that repeats
     // don't (a08: 2.0 s cold vs 0.25 s warm on identical data) — cost that
@@ -205,8 +221,8 @@ object Bench {
     def canon(p: String): String =
       try new java.io.File(p).getCanonicalPath catch { case _: Throwable => p }
     if (new java.io.File(warmDir).isDirectory && canon(warmDir) != canon(sfDir))
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      names.foreach { n =>
+        try SparkEntry.queries(n)(spark, warmDir).count() catch { case _: Throwable => () }
       }
     // SHARED memoized intermediates at the TARGET sf, still untimed (r9
     // VERDICT #3): under min-of-two timing, a shared index cold in both
@@ -268,7 +284,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
       }
     }
-    val out = adaptiveMin(SparkEntry.queries.keys.toSeq, runOne,
+    val out = adaptiveMin(names, runOne,
       () => elapsedSec, budgetSec.toDouble)
     val results = out.best
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
@@ -281,11 +297,7 @@ object Bench {
     //   2b. per-query shuffle/spill metrics appended to
     //       docs/bench/metrics_history.jsonl + one per-family shuffle
     //       summary line (see the comment at the write below);
-    //   3. per-query times keyed by the unique short prefix (a01.., b01..,
-    //      c01.. — prefixes are unique by construction; full names are on
-    //      the family lines and in BASELINE.md) on their own
-    //      {"per_query_sec":...,"part":"i/N"} lines in ASCENDING-cost
-    //      chunks (see the emission comment below);
+    //   3. ONE bounded {"per_query_sec":...,"n":N} line ([[perQueryLine]]);
     //   4. ONE final {"metric":"total",...} line, compact: per-family
     //      subtotals, full-pass count + sums + wall timestamps, retime
     //      count, and the heap — enough to run a thrash-vs-stall
@@ -340,9 +352,15 @@ object Bench {
     // rides along so a stall post-mortem is possible per run, and the
     // warm pass's wall seconds complete the "__warm__" byte row above.
     def fmt2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
+    // warm-gap observability: [] positively confirms a steady-state ledger;
+    // a non-empty list names exactly which shared builds may have landed in
+    // a timed key this run. Bounded (≤20 names), so it never grows with
+    // query count; the ledger line carries the same list, so a crashed warm
+    // pass explains its own near-empty "__warm__" row.
+    val warmFailJson = warmFailures.take(20).map("\"" + _ + "\"").mkString("[", ",", "]")
     val secJson = results.sortBy(_._1).map { case (k, v) =>
       "\"" + k.takeWhile(_ != '_') + "\":" + fmt2(v) }.mkString("{", ",", "}")
-    val secLine = s"""{"round":$round,"app":"${spark.sparkContext.applicationId}","sf":"$sfDir","unit":"sec","cpus":$cpus,"warm_sec":${fmt2(warmSec)},"runs":${out.runs},"pass_sums":${out.passSums.map(fmt2).mkString("[", ",", "]")},"pass_ends":${out.passEnds.map(fmt2).mkString("[", ",", "]")},"retimes":${out.retimed.size},"queries_sec":$secJson}"""
+    val secLine = s"""{"round":$round,"app":"${spark.sparkContext.applicationId}","sf":"$sfDir","unit":"sec","cpus":$cpus,"warm_sec":${fmt2(warmSec)},"runs":${out.runs},"pass_sums":${out.passSums.map(fmt2).mkString("[", ",", "]")},"pass_ends":${out.passEnds.map(fmt2).mkString("[", ",", "]")},"retimes":${out.retimed.size},"warm_failures":$warmFailJson,"queries_sec":$secJson}"""
     try {
       val dir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_METRICS_DIR", "docs/bench"))
       dir.mkdirs()
@@ -353,37 +371,13 @@ object Bench {
       .foreach { case (fam, qs) =>
         println(s"""{"family":"$fam","shuffle_read_mb":${mb(qs.map(_._2.readB).sum)},"shuffle_write_mb":${mb(qs.map(_._2.writeB).sum)},"spill_mb":${mb(qs.map(_._2.spillB).sum)},"peak_task_mb":${mb(qs.map(_._2.peakB).max)}}""")
       }
-    // The per-query map gets its OWN lines: at 210 queries embedding it in
-    // the total line pushed the head fields (metric/value/n/failed) past
-    // the harness's bounded stdout-tail capture and r8's bench went
-    // unparsed. The terminal total line below is short and fixed-size —
-    // it must stay both LAST and SMALL.
-    //
-    // Emission order (r14 VERDICT #1): the tail capture keeps the END of
-    // stdout, so at 267 keys a single alphabetical line lost its HEAD
-    // (a01-b62 missing from BENCH_r14.json). Emit ASCENDING-cost chunks —
-    // the most expensive keys land on the LAST chunk, adjacent to the
-    // total line, so clipping loses only floor-cost keys. Failed queries
-    // (-1) sort to the very end: a failure must never be the thing the
-    // clip hides. Each chunk stays under ~1 KB so several ride the tail
-    // for any suite size; tools/bench_history.py regex-scans the whole
-    // tail, so the chunking is transparent to the history parser.
-    val shortEntries = results
-      .sortBy { case (_, v) => if (v < 0) Double.MaxValue else v }
-      .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" +
-        "%.2f".formatLocal(java.util.Locale.ROOT, v) }
-    val chunks = scala.collection.mutable.ArrayBuffer[Vector[String]]()
-    var cur = Vector.empty[String]; var curLen = 0
-    shortEntries.foreach { e =>
-      if (curLen + e.length + 1 > 960 && cur.nonEmpty) {
-        chunks += cur; cur = Vector.empty; curLen = 0
-      }
-      cur :+= e; curLen += e.length + 1
-    }
-    if (cur.nonEmpty) chunks += cur
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      println(s"""{"per_query_sec":${c.mkString("{", ",", "}")},"part":"${i + 1}/${chunks.size}","order":"asc_cost"}""")
-    }
+    // Per-query seconds get their OWN line: at 210 queries embedding the
+    // map in the total line pushed the head fields (metric/value/n/failed)
+    // past the harness's bounded stdout-tail capture and r8's bench went
+    // unparsed. The line is capped at ~1 KB and leads with failures and the
+    // costliest keys, so whatever the tail keeps is the part that matters;
+    // tools/bench_history.py regex-scans the whole tail.
+    println(perQueryLine(results))
     val fams = results.groupBy { case (n, _) => family(n) }.toSeq.sortBy(_._1)
       .map { case (fam, qs) => "\"" + fam + "\":" + f(qs.map(_._2).filter(_ >= 0).sum) }
       .mkString("{", ",", "}")
@@ -396,15 +390,10 @@ object Bench {
     val shufW = mb(qMetrics.valuesIterator.map(_.writeB).sum)
     val spillT = mb(qMetrics.valuesIterator.map(_.spillB).sum)
     val peakT = if (qMetrics.isEmpty) 0L else mb(qMetrics.valuesIterator.map(_.peakB).max)
-    // warm-gap observability, emitted immediately BEFORE the total line so
-    // it lands inside the harness's bounded stdout-tail capture (a driver
-    // run's stderr is unobservable after the fact, and the per-query chunk
-    // lines above can scroll anything earlier out of the tail — the r8
-    // parsed:null lesson). [] positively confirms a steady-state ledger;
-    // a non-empty list names exactly which shared builds may have landed
-    // in a timed key this run. Bounded (≤20 names): never grows with
-    // query count, so it cannot crowd the total line out.
-    println(s"""{"warm_failures":${warmFailures.take(20).map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
+    // emitted immediately BEFORE the total line so it lands inside the
+    // harness's bounded stdout-tail capture (a driver run's stderr is
+    // unobservable after the fact)
+    println(s"""{"warm_failures":$warmFailJson}""")
     println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n":${results.size},"failed":$failed,"runs":${out.runs},"pass_sums":$sums,"pass_ends":$ends,"retimes":${out.retimed.size},"heap_mb":$heapMb,"shuf_r_mb":$shufR,"shuf_w_mb":$shufW,"spill_mb":$spillT,"peak_mb":$peakT,"families":$fams,"sf":"$sfDir"}""")
     spark.stop()
   }

@@ -1274,7 +1274,7 @@ private[graft] object EntryB {
       // the COLUMN-PRUNED consumer of the npy pair layout (r16
       // Npy.readIds): an ids-only pass opens none of the .vec.npy
       // payloads — the one-array-per-file projection payoff, measured at
-      // 3.05–3.75 % of layout bytes in docs/PLANS.md (graft.NpyScan).
+      // 3.05–3.75 % of layout bytes (docs/PLANS.md records the scan).
       // This key gates that read path end-to-end the way b129 gates the
       // full pair read: the layout is b129's own write (shared
       // ensureWritten purpose — written once per app, bench-warmed), the
@@ -1502,10 +1502,9 @@ private[graft] object EntryB {
       // identical 2-D box query, different curve: Hilbert's unit-step
       // locality gives files tighter min/max envelopes than Morton's
       // diagonal jumps, so the same predicate skips more files
-      // (graft.SkipRate prints both curves' measured skip rates;
-      // docs/PLANS.md records them). Same zday non-negativity guard as
-      // b64 — a negative day would wrap to the top of the key range and
-      // kill the envelope.
+      // (docs/PLANS.md records both curves' measured skip rates). Same
+      // zday non-negativity guard as b64 — a negative day would wrap to
+      // the top of the key range and kill the envelope.
       val dir = graft.sources.Formats.scratchDir(s, "orders_hilbert", d)
       graft.sources.Formats.ensureWritten(s, dir) {
         t(s, d, "orders")

@@ -1,20 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.operators.Sessions
 
-/** Dev tool: print the formatted physical plan of named queries.
-  * Usage: runMain graft.Explain <sfDir> <queryName> [<queryName> ...]
-  * (no args after sfDir = all queries). */
+/** Dev tool: print the formatted physical plan of the selected queries.
+  * Usage: runMain graft.Explain <sfDir> [<prefix> ...]
+  * (no prefixes = all queries; a full query name is its own prefix). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = SparkEntry.select(args.drop(1).toSeq)
+    val spark = Sessions.local(Sessions.envCpus)
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(

@@ -111,6 +111,17 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     EntryA.aQueries ++ EntryB.bQueries ++ EntryC.cQueries ++ EntryC2.cQueries2
 
+  /** The sorted query keys the mains run: every key when `prefixes` is
+    * empty, else each key starting with some prefix (a full key name is its
+    * own prefix). Throws IllegalArgumentException naming every prefix that
+    * matches no key, so a typo fails the run instead of running nothing. */
+  def select(prefixes: Seq[String]): Seq[String] = {
+    val keys = queries.keys.toSeq.sorted
+    val unmatched = prefixes.filterNot(p => keys.exists(_.startsWith(p)))
+    require(unmatched.isEmpty, s"no query key starts with: ${unmatched.mkString(", ")}")
+    if (prefixes.isEmpty) keys else keys.filter(k => prefixes.exists(k.startsWith))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables — every query key has an oracle. */
   def oracleSql: Map[String, String] =

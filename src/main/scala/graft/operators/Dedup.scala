@@ -964,8 +964,6 @@ object Dedup {
       // |nodes| narrow rows — small next to the pair graph itself.
       labels = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter sum=$s converged=$converged")
     }
     if (!converged) {
       // (labels is checkpoint-backed — reclaimed by the ContextCleaner;

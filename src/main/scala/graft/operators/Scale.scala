@@ -96,11 +96,11 @@ object Scale {
     * [[zOrderKey]] alternative whose rotations remove Morton's diagonal
     * jumps: every curve step is a unit grid step, so consecutive key
     * ranges are tighter rectangles and sorted-file min/max envelopes
-    * cover less dead area on 2-D box predicates (graft.SkipRate measures
-    * both curves on the same layout; docs/PLANS.md records the skip
-    * rates). A 16-round rotate/reflect state machine can't unroll as a
-    * column-expression ladder without exponential tree growth, so this
-    * is a codegen `Expression`
+    * cover less dead area on 2-D box predicates (docs/PLANS.md records
+    * both curves' skip rates on the same layout). A 16-round
+    * rotate/reflect state machine can't unroll as a column-expression
+    * ladder without exponential tree growth, so this is a codegen
+    * `Expression`
     * ([[graft.plans.SpatialExpressions.HilbertKey]]); the b92 oracle
     * mirrors the identical per-plane algebra as a CTE ladder. */
   def hilbertKey(x: Column, y: Column): Column =

@@ -2,8 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session plumbing for iterative operators that need operator-specific SQL
-  * conf (AQE off, right-sized shuffle.partitions) for their rounds.
+/** Session plumbing: the one local session factory ([[local]]), and
+  * conf-isolated siblings for iterative operators that need
+  * operator-specific SQL conf (AQE off, right-sized shuffle.partitions)
+  * for their rounds.
   *
   * Setting that conf on the caller's session would leak it to queries
   * planned CONCURRENTLY on the same session (they'd be optimized under the
@@ -12,6 +14,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * RuntimeConfig — and DataFrames cross the session boundary by re-rooting.
   */
 private[graft] object Sessions {
+
+  /** Core count for the CLI mains: `SPARK_GRAFT_CPUS`, default 32. */
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** The one session every main and the test suites run on: `local[cpus]`
+    * with one shuffle partition per core, UTC session time (the DuckDB
+    * oracle's zone), no UI, and WARN logging. */
+  def local(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Re-root `df`'s logical plan onto `target` (a sibling session of the
     * same SparkContext) via a uniquely-named global temp view. Dataset

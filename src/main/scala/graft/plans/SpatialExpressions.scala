@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   * diagonal jumps (every curve step is a unit grid step), so consecutive
   * key ranges are tighter rectangles and file min/max envelopes cover
   * less dead area — measurably better skipping on 2-D box predicates
-  * (graft.SkipRate prints both; docs/PLANS.md holds the numbers).
+  * (docs/PLANS.md records both curves' skip rates).
   */
 object SpatialExpressions {
 

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * stall-contaminated pass 1 consumed the wall budget, the all-or-nothing
   * pass 2 was skipped, and the contaminated numbers shipped as the official
   * record. The fix must recover the true times via outlier re-runs that fit
-  * the remaining budget. */
+  * the remaining budget. The mains' key selection and Bench's bounded
+  * per-query line are pure too and are checked here without Spark. */
 class BenchSchedulerSpec extends AnyFunSuite {
 
   /** Simulated host: `run` returns the scripted duration for the i-th
@@ -89,5 +90,35 @@ class BenchSchedulerSpec extends AnyFunSuite {
     val best = out.best.toMap
     assert(out.retimed == Seq("a02_q"))
     assert(best("a02_q") == 0.5 && best("b04_q") == 40.0)
+  }
+
+  test("select: no prefixes is every key, sorted") {
+    val all = SparkEntry.select(Nil)
+    assert(all == SparkEntry.queries.keys.toSeq.sorted)
+  }
+
+  test("select: a prefix picks every key it starts, a full name picks itself") {
+    val b7 = SparkEntry.select(Seq("b7"))
+    assert(b7.nonEmpty && b7.forall(_.startsWith("b7")))
+    assert(b7 == b7.sorted)
+    val full = SparkEntry.queries.keys.filter(_.startsWith("b70_")).toSeq
+    assert(full.size == 1)
+    assert(SparkEntry.select(full) == full)
+    assert(SparkEntry.select(Seq("a01", "b7")) == SparkEntry.select(Seq("a01")) ++ b7)
+  }
+
+  test("select: a prefix that matches no key fails, naming every such prefix") {
+    val e = intercept[IllegalArgumentException](SparkEntry.select(Seq("a01", "b7O", "zz")))
+    assert(e.getMessage.contains("b7O") && e.getMessage.contains("zz"))
+    assert(!e.getMessage.contains("a01"))
+  }
+
+  test("per-query line: failures first, then costliest, capped near 1 KB") {
+    val results = (1 to 300).map(i => f"c$i%03d_q" -> i / 100.0) :+ ("b02_q" -> -1.0)
+    val line = Bench.perQueryLine(results)
+    assert(line.length <= 1024 && line.length > 1000)
+    assert(line.startsWith("""{"per_query_sec":{"b02":-1.00,"c300":3.00,"c299":2.99,"""))
+    assert(line.endsWith("""},"n":301}"""))
+    assert(Bench.perQueryLine(Seq("a01_q" -> 0.5)) == """{"per_query_sec":{"a01":0.50},"n":1}""")
   }
 }

@@ -7,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (FIXTURES.md §2 fixtures live in the
   * individual specs). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.operators.Sessions.local(4)
 
   private val tmpDirs = new scala.collection.mutable.ArrayBuffer[java.nio.file.Path]
 
