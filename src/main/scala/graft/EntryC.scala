@@ -234,18 +234,10 @@ private[graft] object EntryC {
 
     "c45_pagerank" -> ((s, d) => {
       // centrality weighting over the real customer↔supplier bipartite
-      // trade graph (distinct (o_custkey, l_suppkey) pairs via
-      // orders ⋈ lineitem, both directions; key namespaces disjoint by
-      // parity). 3 fixed rounds of exact integer PageRank — see
-      // Graph.pageRankNano for the formula and per-round shuffle cost.
-      val li = t(s, d, "lineitem")
-      val eBase = li
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eBase.union(
-        eBase.select(col("dst").as("src"), col("src").as("dst")))
+      // trade graph (EntryShared.tradeEdges). 3 fixed rounds of exact
+      // integer PageRank — see Graph.pageRankNano for the formula and
+      // per-round shuffle cost.
+      val edges = tradeEdges(s, d)
       val nodes = t(s, d, "customer")
         .select((col("c_custkey") * 2).as("node"))
         .union(t(s, d, "supplier").select((col("s_suppkey") * 2 + 1).as("node")))

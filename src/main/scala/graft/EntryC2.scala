@@ -346,14 +346,7 @@ private[graft] object EntryC2 {
       // mass only on the seed customers (c_custkey ≡ 0 mod 20) — the
       // "related accounts" recommendation signal, exact nano-integer
       // recurrence (Graph.personalizedPageRankNano scaladoc)
-      val li = t(s, d, "lineitem")
-      val eBase = li
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eBase.union(
-        eBase.select(col("dst").as("src"), col("src").as("dst")))
+      val edges = tradeEdges(s, d)
       val nodes = t(s, d, "customer")
         .select((col("c_custkey") * 2).as("node"),
           (pmod(col("c_custkey"), lit(20)) === 0).cast("long").as("seed"))

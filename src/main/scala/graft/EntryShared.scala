@@ -54,6 +54,19 @@ private[graft] object EntryShared {
     graft.sources.Npy.readVectors(s, npyEmbeddingsDir(s, d))
       .select(col("id").as("vec_id"), col("vec").as("embedding"))
 
+  /** The customer↔supplier trade graph of c45 and c86: distinct
+    * (o_custkey, l_suppkey) pairs via orders ⋈ lineitem, in both
+    * directions. Customers get even node ids and suppliers odd ones, so
+    * the two key namespaces are disjoint. */
+  private[graft] def tradeEdges(s: SparkSession, d: String): DataFrame = {
+    val eBase = t(s, d, "lineitem")
+      .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .select((col("o_custkey") * 2).as("src"),
+        (col("l_suppkey") * 2 + 1).as("dst"))
+      .distinct()
+    eBase.union(eBase.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
   /** Exact, order-independent sum of a 2dp-double column, as double. */
   private[graft] def dsum(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")
 

@@ -857,16 +857,18 @@ object Dedup {
     *
     * The fixed point is unique (min id reachable from each node), so the
     * result is deterministic regardless of execution order. Each round is
-    * two joins + one groupBy on node ids; labels are locally checkpointed
-    * per round (truncating lineage — the jump self-join would otherwise
-    * double the plan every round) and the previous round is unpersisted.
-    * The driver-side loop holds only a scalar label-sum, never data. If
+    * two joins + one groupBy on node ids and follows the [[Iterate]] round
+    * policy: its label frames are lazy local checkpoints (truncating
+    * lineage — the jump self-join would otherwise double the plan every
+    * round), and its one action is the label-sum probe that materializes
+    * them. The driver-side loop holds only that scalar, never data. If
     * the loop exits without reaching the fixed point it THROWS rather than
     * silently returning partially-propagated labels.
     *
-    * Graph-side intermediates (symmetrized edge list) are unpersisted on
-    * exit; the returned labels stay persisted (callers typically reuse them
-    * — unpersist when done).
+    * Graph-side intermediates (symmetrized edge list, and the pair list
+    * unless the caller persisted it) are unpersisted on exit, converged or
+    * not. The returned labels are checkpoint-backed: there is nothing to
+    * unpersist ([[Iterate]]).
     *
     * The rounds need operator-specific conf (AQE off, right-sized
     * shuffle.partitions); they run on a conf-isolated `newSession()` clone
@@ -914,73 +916,50 @@ object Dedup {
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> parts.toString)
     val edges = Sessions.reroot(edgesOrigin, sess)
-    // localCheckpoint (eager) rather than persist: the pointer-jump
-    // self-join references the previous round's labels twice, so without
-    // lineage truncation the logical plan doubles per round and planning
-    // itself blows up. Checkpointed labels keep every round's plan flat.
-    // Initialization fuses the first neighbor-min step (lbl₀ = min(id,
-    // min neighbor)) into the node-set aggregation — one round for free.
-    var labels = edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("m"))
-      .select(col("src").as("id"), least(col("src"), col("m")).as("lbl"))
-      .localCheckpoint()
-    // labels only ever decrease, so the label sum is strictly monotone until
-    // the fixed point — convergence needs just one agg action per round, not
-    // a join-based diff
-    // sum() of an empty frame is NULL — an empty pair list (a corpus with
-    // no near-dups) must converge to an empty label frame, not NPE
-    def lblSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = lblSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // min over self and neighbors in one join+groupBy (self-loops above
-      // make lbl(u) itself part of the aggregation).
-      // Lazy checkpoint: the jump self-join below reads `stepped` twice;
-      // the lazy-checkpointed RDD is computed once (during this round's
-      // eager materialization) and served from cache to both sides
-      val stepped = edges.join(labels, edges("dst") === labels("id"))
-        .groupBy(col("src")).agg(min(col("lbl")).as("lbl"))
-        .select(col("src").as("id"), col("lbl"))
-        .localCheckpoint(eager = false)
-      // pointer jump: labels are node ids, so every label has a row — an
-      // inner self-join resolves lbl -> lbl(lbl) (which is ≤ lbl, labels
-      // only decrease)
-      val next = stepped.as("n")
-        .join(stepped.select(col("id").as("jid"), col("lbl").as("jlbl")),
-          col("n.lbl") === col("jid"))
-        .select(col("n.id").as("id"), col("jlbl").as("lbl"))
-        .localCheckpoint()
-      val s = lblSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      // previous rounds' localCheckpoint RDDs are NOT CacheManager
-      // entries, so Dataset.unpersist would be a no-op on them; dropping
-      // the references here lets the ContextCleaner reclaim their blocks.
-      // Retention is bounded either way: rounds ≤ maxIter (pointer
-      // jumping converges in O(log n)), and each round's label frame is
-      // |nodes| narrow rows — small next to the pair graph itself.
-      labels = next
-      iter += 1
-    }
-    if (!converged) {
-      // (labels is checkpoint-backed — reclaimed by the ContextCleaner;
-      // only the persisted frames need explicit unpersist)
+    // labels only ever decrease, so the label sum is strictly monotone
+    // until the fixed point — the round's probe is one agg, not a
+    // join-based diff. sum() of an empty frame is NULL — an empty pair
+    // list (a corpus with no near-dups) must converge to an empty label
+    // frame, not NPE
+    def withSum(labels: DataFrame): (DataFrame, java.math.BigDecimal) =
+      (labels, Option(labels.agg(sum(col("lbl").cast("decimal(38,0)")))
+        .head().getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO))
+    try {
+      // Initialization fuses the first neighbor-min step (lbl₀ = min(id,
+      // min neighbor)) into the node-set aggregation — one round for free.
+      val init = withSum(edges.groupBy(col("src"))
+        .agg(min(col("dst")).as("m"))
+        .select(col("src").as("id"), least(col("src"), col("m")).as("lbl"))
+        .localCheckpoint(eager = false))
+      val (labels, _) = Iterate.fixpoint(init, maxIter,
+          "Dedup.clusters (a component deeper than 2^maxIter hops?)") {
+        case (labels, labelSum) =>
+          // min over self and neighbors in one join+groupBy (self-loops
+          // above make lbl(u) itself part of the aggregation); the jump
+          // self-join below reads `stepped` twice, and its checkpoint
+          // computes it once for both sides
+          val stepped = edges.join(labels, edges("dst") === labels("id"))
+            .groupBy(col("src")).agg(min(col("lbl")).as("lbl"))
+            .select(col("src").as("id"), col("lbl"))
+            .localCheckpoint(eager = false)
+          // pointer jump: labels are node ids, so every label has a row — an
+          // inner self-join resolves lbl -> lbl(lbl) (which is ≤ lbl, labels
+          // only decrease)
+          val next = withSum(stepped.as("n")
+            .join(stepped.select(col("id").as("jid"), col("lbl").as("jlbl")),
+              col("n.lbl") === col("jid"))
+            .select(col("n.id").as("id"), col("jlbl").as("lbl"))
+            .localCheckpoint(eager = false))
+          (next, next._2.compareTo(labelSum) == 0)
+      }
+      // labels is checkpoint-backed (LogicalRDD) — re-rooting onto the
+      // caller's session hands back a plan with no tie to the clone
+      Sessions.reroot(
+        labels.select(col("id"), col("lbl").as("cluster_rep")), origin)
+    } finally {
       edgesOrigin.unpersist(); rawEdges.unpersist()
       if (!callerPersisted) p.unpersist()
-      throw new IllegalStateException(
-        s"Dedup.clusters did not converge within $maxIter rounds — " +
-          "component deeper than 2^maxIter hops or a monotonicity bug; " +
-          "raise maxIter rather than consuming partial labels")
     }
-    edgesOrigin.unpersist(); rawEdges.unpersist()
-    if (!callerPersisted) p.unpersist()
-    // labels is checkpoint-backed (LogicalRDD) — re-rooting onto the
-    // caller's session hands back a plan with no tie to the clone
-    Sessions.reroot(
-      labels.select(col("id"), col("lbl").as("cluster_rep")), origin)
   }
 
   /** Embedding near-dup: ALL pairs with cosine ≥ threshold — exact.

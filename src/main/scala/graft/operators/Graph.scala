@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph computations beyond connected components
@@ -26,16 +26,16 @@ object Graph {
     * skewed label vector can never accumulate.
     *
     * Each round is two (groupBy node + join-back + symmetrize-distinct)
-    * passes — equi-shuffles on node ids only. Rounds are eagerly
-    * localCheckpoint'ed (flat plans, the [[Dedup.clusters]] lesson) on a
-    * conf-isolated session clone (AQE off, graph-sized partitions), and
-    * the driver holds only convergence scalars. Convergence is the EXACT
-    * edge-set fixpoint (count equal + anti-join empty — no checksum
-    * shortcuts); fixpoint ⟺ all components are stars, whence the label
-    * read-off least(u, min N(u)) is the component minimum. Same output
-    * contract as [[Dedup.clusters]]; equivalence asserted on chain and
-    * random fixtures in GraphSpec. Throws rather than returning partial
-    * labels if `maxIter` is hit. */
+    * passes — equi-shuffles on node ids only. Rounds follow the
+    * [[Iterate]] round policy (lazy local checkpoints for flat plans, one
+    * count probe per round) on a conf-isolated session clone (AQE off,
+    * graph-sized partitions), and the driver holds only convergence
+    * scalars. Convergence is the EXACT edge-set fixpoint (count equal +
+    * anti-join empty — no checksum shortcuts); fixpoint ⟺ all components
+    * are stars, whence the label read-off least(u, min N(u)) is the
+    * component minimum. Same output contract as [[Dedup.clusters]];
+    * equivalence asserted on chain and random fixtures in GraphSpec.
+    * Throws rather than returning partial labels if `maxIter` is hit. */
   def connectedComponentsStars(pairs: DataFrame, idA: String = "a", idB: String = "b",
                                maxIter: Int = 30): DataFrame = {
     val p0 = pairs.select(col(idA).as("x"), col(idB).as("y"))
@@ -45,14 +45,6 @@ object Graph {
     val sess = Sessions.isolated(origin,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> parts.toString)
-    // lazy checkpoint + the count below as its materializer: the eager
-    // form ran TWO jobs per frame (the internal materialization plus the
-    // probe's count over the fresh cache) — fused to one (r17-opt,
-    // guide §2.4 applied to actions; this iterative class pays the
-    // per-job driver-latency floor k times)
-    var adj = Sessions.reroot(
-        p0.union(p0.select(col("y").as("x"), col("x").as("y"))).distinct(), sess)
-      .localCheckpoint(eager = false)
     def star(a: DataFrame, large: Boolean): DataFrame = {
       val m = a.groupBy(col("x")).agg(min(col("y")).as("mn"))
         .select(col("x"), least(col("x"), col("mn")).as("m"))
@@ -63,73 +55,26 @@ object Graph {
       val e = reattached.union(anchors).where(col("x") =!= col("y"))
       e.union(e.select(col("y").as("x"), col("x").as("y"))).distinct()
     }
-    var iter = 0
-    var converged = false
-    // convergence probe cost (r17, guide §2.4 applied to ACTIONS): the
-    // previous round's edge count is carried forward instead of re-run —
-    // `adj.count()` per round was a whole extra cached-scan job, and this
-    // iterative class amplifies per-job driver latency k× (the
-    // stall-amplifier note in docs/PLANS.md). The anti-join diff still
-    // only runs when the counts already match (&& short-circuit), i.e.
-    // usually exactly once, on the converged round.
-    var adjCount = adj.count()
-    while (iter < maxIter && !converged) {
+    // the edge count is each round's probe ([[Iterate]]); it rides in the
+    // state, so the next round compares against it instead of re-counting.
+    // The anti-join diff only runs when the counts already match (&&
+    // short-circuit), i.e. usually exactly once, on the converged round.
+    val adj0 = Sessions.reroot(
+        p0.union(p0.select(col("y").as("x"), col("x").as("y"))).distinct(), sess)
+      .localCheckpoint(eager = false)
+    val (adj, _) = Iterate.fixpoint((adj0, adj0.count()), maxIter,
+        "Graph.connectedComponentsStars") { case (adj, adjCount) =>
       val next = star(star(adj, large = true), large = false)
         .localCheckpoint(eager = false)
       val nextCount = next.count()
-      converged = nextCount == adjCount &&
-        next.join(adj, Seq("x", "y"), "left_anti").isEmpty
-      adjCount = nextCount
-      adj.unpersist()
-      adj = next
-      iter += 1
-    }
-    if (!converged) {
-      adj.unpersist()
-      throw new IllegalStateException(
-        s"Graph.connectedComponentsStars did not converge within $maxIter rounds — " +
-          "raise maxIter rather than consuming a non-star edge set")
+      ((next, nextCount), nextCount == adjCount &&
+        next.join(adj, Seq("x", "y"), "left_anti").isEmpty)
     }
     val labels = adj.groupBy(col("x")).agg(min(col("y")).as("mn"))
       .select(col("x").as("node"), least(col("x"), col("mn")).as("cluster_rep"))
     Sessions.reroot(labels, origin)
   }
 
-  /** Fixed-iteration PageRank in exact integer (nano-scaled) arithmetic.
-    *
-    * Web-corpus pipelines weight documents by host/page centrality (the
-    * Common Crawl ranking shape); this is that computation made
-    * engine-exact. Ranks are unnormalized longs starting at 1e9 per node;
-    * each round applies
-    *
-    *   r'(v) = 150_000_000 + Σ_{(u,v) ∈ E} (85 · r(u)) div (100 · deg(u))
-    *
-    * i.e. damping 0.85 with FLOOR division — every intermediate is a
-    * BIGINT, so the result is bit-identical at any parallelism and in any
-    * engine that mirrors the formula (DuckDB `//`). Classic float PageRank
-    * sums millions of doubles in nondeterministic order; this never
-    * touches a float. Nodes without in-edges keep the teleport term
-    * (the node list left-joins the contribution sums); dangling nodes
-    * (no out-edges) contribute nothing, matching the "remove dangling
-    * mass" PageRank variant — fine for a relative ranking signal.
-    *
-    * Scale (100 TB): the degree-annotated edge list (src, dst, deg) is
-    * built once and PERSISTED (memory-with-disk-spill) — the `iters`
-    * rounds each reference it, and without the cache the whole
-    * edges→degree build would re-derive per round (AQE's exchange-stage
-    * reuse catches the duplicate shuffles within one action, but the
-    * explicit cache does not rely on it and also serves repeated
-    * actions). Cache retention: lifetime of the app, by design — an
-    * iterative operator's edge relation is the canonical persisted
-    * intermediate; callers running many distinct graphs can unpersist
-    * via the returned plan's lineage. Each round is then a shuffle of
-    * the rank vector (2 longs per node) onto src for the contribution
-    * join plus one partial+final aggregation onto dst — O(E + V) bytes
-    * per round, the textbook distributed-PageRank cost. A fixed small
-    * iteration count (ranking signals converge in single digits) keeps
-    * the whole thing lazily composable: no convergence action, no
-    * checkpoint needed at this plan depth.
-    */
   /** Per-node triangle counts over an undirected pair list (`a < b`,
     * distinct) via degree orientation — the standard way to count triangles
     * without the naive join's hub blow-up.
@@ -213,8 +158,9 @@ object Graph {
     // round's plan with a LogicalRDD, and the underlying RDD DAG dedupes
     // the three references structurally (the same exponential
     // re-evaluation the c66 ORACLE avoids with MATERIALIZED stages;
-    // clusters' eager localCheckpoint is the unbounded-iteration
-    // variant — here eager=false keeps the builder action-free).
+    // [[Iterate]] is the until-converged variant, whose probe actions
+    // materialize the checkpoints — here no round runs an action, which
+    // keeps the builder action-free).
     var e = pairs.select(col("a"), col("b"))
     for (_ <- 1 to rounds) {
       val deg = e.select(col("a").as("node"))
@@ -231,6 +177,45 @@ object Graph {
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
   }
 
+  /** Fixed-iteration PageRank in exact integer (nano-scaled) arithmetic.
+    *
+    * Web-corpus pipelines weight documents by host/page centrality (the
+    * Common Crawl ranking shape); this is that computation made
+    * engine-exact. Ranks are unnormalized longs starting at 1e9 per node;
+    * each round applies
+    *
+    *   r'(v) = 150_000_000 + Σ_{(u,v) ∈ E} (85 · r(u)) div (100 · deg(u))
+    *
+    * i.e. damping 0.85 with FLOOR division — every intermediate is a
+    * BIGINT, so the result is bit-identical at any parallelism and in any
+    * engine that mirrors the formula (DuckDB `//`). Classic float PageRank
+    * sums millions of doubles in nondeterministic order; this never
+    * touches a float. Nodes without in-edges keep the teleport term
+    * (the node list left-joins the contribution sums); dangling nodes
+    * (no out-edges) contribute nothing, matching the "remove dangling
+    * mass" PageRank variant — fine for a relative ranking signal.
+    *
+    * Scale (100 TB): the degree-annotated edge list (src, dst, deg) is
+    * built once and PERSISTED (memory-with-disk-spill) — the `iters`
+    * rounds each reference it, and without the cache the whole
+    * edges→degree build would re-derive per round (AQE's exchange-stage
+    * reuse catches the duplicate shuffles within one action, but the
+    * explicit cache does not rely on it and also serves repeated
+    * actions). Cache retention: lifetime of the app, by design — an
+    * iterative operator's edge relation is the canonical persisted
+    * intermediate; callers running many distinct graphs can unpersist
+    * via the returned plan's lineage. Each round is then a shuffle of
+    * the rank vector (2 longs per node) onto src for the contribution
+    * join plus one partial+final aggregation onto dst — O(E + V) bytes
+    * per round, the textbook distributed-PageRank cost. A fixed small
+    * iteration count (ranking signals converge in single digits) keeps
+    * the whole thing lazily composable: no convergence action, no
+    * checkpoint needed at this plan depth.
+    */
+  def pageRankNano(edges: DataFrame, nodes: DataFrame, iters: Int = 3): DataFrame =
+    rankNano(edges, nodes.select(col("node")), lit(1L), iters)
+      .select(col("node"), col("r").as("rank_nano"))
+
   /** Personalized PageRank (fixed iterations, exact nano-integers): the
     * restart mass lands ONLY on the seed set, so rank measures proximity
     * TO THE SEEDS through the graph — the "similar items to this basket" /
@@ -246,28 +231,16 @@ object Graph {
     * same rounds. Same per-round shuffle cost as pageRankNano (edge join +
     * dst groupBy); `nodes` must carry an integer 0/1 `seed` column. */
   def personalizedPageRankNano(edges: DataFrame, nodes: DataFrame,
-                               iters: Int = 3): DataFrame = {
-    require(iters >= 1 && iters <= 8,
-      s"iters must be in [1,8] (fixed-iteration ranking signal), got $iters")
-    val e = edges.select(col("src"), col("dst"))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val withDeg = e.join(deg, Seq("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.select(col("node"), col("seed"))
-    var rank = n.select(col("node"), (col("seed") * 1000000000L).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = withDeg.join(rank, withDeg("src") === rank("node"))
-        .select(col("dst"),
-          expr("(85L * r) div (100L * deg)").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("cs"))
-      rank = n.join(contrib, n("node") === contrib("dst"), "left")
-        .select(col("node"),
-          (col("seed") * 150000000L + coalesce(col("cs"), lit(0L))).as("r"))
-    }
-    rank.select(col("node"), col("r").as("ppr_nano"))
-  }
+                               iters: Int = 3): DataFrame =
+    rankNano(edges, nodes.select(col("node"), col("seed")), col("seed"), iters)
+      .select(col("node"), col("r").as("ppr_nano"))
 
-  def pageRankNano(edges: DataFrame, nodes: DataFrame, iters: Int = 3): DataFrame = {
+  /** The shared nano-integer recurrence: `r` starts at seed·10⁹ and each
+    * round is seed·150e6 plus the floor-divided in-edge contributions.
+    * PageRank passes `lit(1L)` as the seed, so its restart terms fold to
+    * constants and its plan is the unseeded one. */
+  private def rankNano(edges: DataFrame, nodes: DataFrame, seed: Column,
+                       iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8,
       s"iters must be in [1,8] (fixed-iteration ranking signal), got $iters")
     val e = edges.select(col("src"), col("dst"))
@@ -275,17 +248,16 @@ object Graph {
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val withDeg = e.join(deg, Seq("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.select(col("node"))
-    var rank = n.select(col("node"), lit(1000000000L).as("r"))
+    var rank = nodes.select(col("node"), (seed * 1000000000L).as("r"))
     for (_ <- 1 to iters) {
       val contrib = withDeg.join(rank, withDeg("src") === rank("node"))
         .select(col("dst"),
           expr("(85L * r) div (100L * deg)").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("cs"))
-      rank = n.join(contrib, n("node") === contrib("dst"), "left")
+      rank = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
         .select(col("node"),
-          (lit(150000000L) + coalesce(col("cs"), lit(0L))).as("r"))
+          (seed * 150000000L + coalesce(col("cs"), lit(0L))).as("r"))
     }
-    rank.select(col("node"), col("r").as("rank_nano"))
+    rank
   }
 }

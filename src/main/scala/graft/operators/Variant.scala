@@ -66,59 +66,47 @@ object Variant {
     * dangling reference target). Pointer jumping (`ptr := ptr(ptr)`)
     * doubles the resolved distance per round, so unbounded-depth
     * structures resolve in O(log depth) rounds — each round is one
-    * equi-join per table, locally checkpointed to keep lineage flat.
-    * Throws when chains outlast `maxRounds` (depth > 2^maxRounds), which
-    * also catches pointer CYCLES — a cyclic parent chain has no root and
-    * is a data bug for this helper.
+    * self-join of the hop table under the [[Iterate]] round policy (a
+    * lazy local checkpoint, one probe action per round: did any pointer
+    * move?). Throws when chains outlast `maxRounds` (depth >
+    * 2^maxRounds), which also catches pointer CYCLES — a cyclic parent
+    * chain has no root and is a data bug for this helper.
     */
   def followChain(df: DataFrame, keyCol: String, ptrCol: String,
                   maxRounds: Int = 20): DataFrame = {
-    // state: (key, cur, done) — cur is the farthest node reached so far.
-    // The two initial checkpoints below materialize the CALLER's upstream
-    // plan on the caller's session with AQE untouched (it may need skew
-    // splits); only the rounds after them run with AQE off, same rationale
-    // as Dedup.clusters: every round re-plans identical tiny stages and
+    // The initial checkpoint below plans the CALLER's upstream on the
+    // caller's session with AQE untouched (it may need skew splits); only
+    // the rounds after it run with AQE off, same rationale as
+    // Dedup.clusters: every round re-plans identical tiny stages and
     // AQE's per-stage materialization overhead multiplies by O(log depth).
     // That conf lives on a conf-isolated session clone (Sessions), never
-    // the caller's session; checkpointed state is re-rooted across.
+    // the caller's session; checkpointed frames are re-rooted across.
     val origin = df.sparkSession
     val sess = Sessions.isolated(origin, "spark.sql.adaptive.enabled" -> "false")
-    var state = Sessions.reroot(
-      df.select(col(keyCol).as("key"),
-          coalesce(col(ptrCol), col(keyCol)).as("cur"),
-          col(ptrCol).isNull.as("done"))
-        .localCheckpoint(), sess)
-    // hop table jumped through itself each round: hptr(k) = node 2^r hops
-    // past k (or the chain end if nearer)
-    var hops = Sessions.reroot(
+    // hop table jumped through itself each round: after r rounds hptr(k)
+    // is the node 2^r hops past k, or the chain end if nearer — jumps
+    // stop at a node whose own pointer is null or at a dangling target. A
+    // round that moves no pointer has reached the fixpoint. The hop table
+    // is the whole state: a second frame materialized by the same probe
+    // would only be an ancestor of the probed checkpoint, and Spark
+    // truncates the lineage of the probed one alone.
+    val hops0 = Sessions.reroot(
       df.select(col(keyCol).as("hkey"), col(ptrCol).as("hptr"))
-        .localCheckpoint(), sess)
-    var iter = 0
-    var remaining = state.where(!col("done")).count()
-    while (remaining > 0 && iter < maxRounds) {
-      val next = state.join(hops, state("cur") === hops("hkey"), "left")
-        .select(col("key"),
-          when(col("done") || col("hptr").isNull, col("cur"))
-            .otherwise(col("hptr")).as("cur"),
-          // ends when cur's pointer is null (root) or cur is dangling
-          (col("done") || col("hptr").isNull).as("done"))
-        .localCheckpoint()
+        .localCheckpoint(eager = false), sess)
+    val hops = Iterate.fixpoint(hops0, maxRounds,
+        "Variant.followChain (a pointer cycle, or a chain deeper than 2^maxRounds)") { hops =>
       val jumped = hops.as("h1")
         .join(hops.select(col("hkey").as("jkey"), col("hptr").as("jptr")),
           col("h1.hptr") === col("jkey"), "left")
         .select(col("h1.hkey").as("hkey"),
-          coalesce(col("jptr"), col("h1.hptr")).as("hptr"))
-        .localCheckpoint()
-      state.unpersist(); hops.unpersist()
-      state = next; hops = jumped
-      remaining = state.where(!col("done")).count()
-      iter += 1
+          coalesce(col("jptr"), col("h1.hptr")).as("hptr"),
+          col("jptr").isNotNull.as("moved"))
+        .localCheckpoint(eager = false)
+      (jumped, jumped.where(col("moved")).count() == 0)
     }
-    if (remaining > 0)
-      throw new IllegalStateException(
-        s"followChain: $remaining chains unresolved after $iter rounds " +
-          s"(depth > 2^$iter or a pointer cycle)")
-    Sessions.reroot(state.select(col("key"), col("cur").as("root")), origin)
+    // a null pointer marks a root, which is its own chain's end
+    Sessions.reroot(hops.select(col("hkey").as("key"),
+      coalesce(col("hptr"), col("hkey")).as("root")), origin)
   }
 
   /** Ingest-side pointer normalization — the declared Spark answer to

@@ -41,6 +41,14 @@ class GraphSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("pageRankNano is personalizedPageRankNano with every seed 1") {
+    val (edges, nodes) = fixture
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(ranks(Graph.pageRankNano(edges, nodes, iters = 3)) ==
+      ranks(Graph.personalizedPageRankNano(edges, nodes.withColumn("seed", lit(1L)), iters = 3)))
+  }
+
   test("triangleCounts: K4 has 4 triangles crediting every node 3×; a square has none") {
     val s = spark; import s.implicits._
     val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)).toDF("a", "b")
@@ -107,6 +115,14 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(stars == jump, "algorithms diverged on the chain")
     assert(stars.values.toSet == Set(1L))
+  }
+
+  test("star-contraction CC throws instead of returning a non-star edge set") {
+    val s = spark; import s.implicits._
+    val chain = (1L until 300L).map(i => (i, i + 1)).toDF("a", "b")
+    intercept[IllegalStateException] {
+      Graph.connectedComponentsStars(chain, maxIter = 1)
+    }
   }
 
   test("star-contraction CC equals pointer-jumping CC on a random multi-component graph") {

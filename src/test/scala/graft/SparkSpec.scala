@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +22,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     tmpDirs.synchronized { tmpDirs += p }
     p
+  }
+
+  /** Spark jobs started while `f` runs, on this thread's job group. A
+    * marker job started afterwards flushes the listener bus: its start
+    * event is delivered after every earlier one. */
+  def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == "jobs-marker") marker.countDown() else groups.add(String.valueOf(g))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("jobs-probe", "jobs under test")
+      f
+      sc.setJobGroup("jobs-marker", "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job start never delivered")
+      groups.toArray.count(_ == "jobs-probe")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   override def afterAll(): Unit = {

@@ -1,9 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
@@ -12,33 +9,6 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * runs no inference job, yet reads exactly what a plain
   * `spark.read.parquet` reads, as a fresh relation, and sees a rewrite. */
 class TablesSpec extends SparkSpec {
-
-  /** Spark jobs started while `f` runs, on this thread's job group. A
-    * marker job started afterwards flushes the listener bus: its start
-    * event is delivered after every earlier one. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == "tables-marker") marker.countDown() else groups.add(String.valueOf(g))
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("tables-probe", "jobs under test")
-      f
-      sc.setJobGroup("tables-marker", "listener flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job start never delivered")
-      groups.toArray.count(_ == "tables-probe")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** (row count, order-independent sum of per-row xxhash64). */
   private def rowHash(df: DataFrame): (Long, java.math.BigDecimal) = {
