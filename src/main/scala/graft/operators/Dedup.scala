@@ -921,19 +921,19 @@ object Dedup {
     // join-based diff. sum() of an empty frame is NULL — an empty pair
     // list (a corpus with no near-dups) must converge to an empty label
     // frame, not NPE
-    def withSum(labels: DataFrame): (DataFrame, java.math.BigDecimal) =
-      (labels, Option(labels.agg(sum(col("lbl").cast("decimal(38,0)")))
-        .head().getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO))
+    def labelSum(labels: DataFrame): java.math.BigDecimal =
+      Option(labels.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0))
+        .getOrElse(java.math.BigDecimal.ZERO)
     try {
       // Initialization fuses the first neighbor-min step (lbl₀ = min(id,
       // min neighbor)) into the node-set aggregation — one round for free.
-      val init = withSum(edges.groupBy(col("src"))
+      val labels0 = edges.groupBy(col("src"))
         .agg(min(col("dst")).as("m"))
         .select(col("src").as("id"), least(col("src"), col("m")).as("lbl"))
-        .localCheckpoint(eager = false))
-      val (labels, _) = Iterate.fixpoint(init, maxIter,
+        .localCheckpoint(eager = false)
+      val (labels, _) = Iterate.fixpoint((labels0, labelSum(labels0)), maxIter,
           "Dedup.clusters (a component deeper than 2^maxIter hops?)") {
-        case (labels, labelSum) =>
+        case (labels, sum0) =>
           // min over self and neighbors in one join+groupBy (self-loops
           // above make lbl(u) itself part of the aggregation); the jump
           // self-join below reads `stepped` twice, and its checkpoint
@@ -945,12 +945,13 @@ object Dedup {
           // pointer jump: labels are node ids, so every label has a row — an
           // inner self-join resolves lbl -> lbl(lbl) (which is ≤ lbl, labels
           // only decrease)
-          val next = withSum(stepped.as("n")
+          val next = stepped.as("n")
             .join(stepped.select(col("id").as("jid"), col("lbl").as("jlbl")),
               col("n.lbl") === col("jid"))
             .select(col("n.id").as("id"), col("jlbl").as("lbl"))
-            .localCheckpoint(eager = false))
-          (next, next._2.compareTo(labelSum) == 0)
+            .localCheckpoint(eager = false)
+          val nextSum = labelSum(next)
+          ((next, nextSum), nextSum.compareTo(sum0) == 0)
       }
       // labels is checkpoint-backed (LogicalRDD) — re-rooting onto the
       // caller's session hands back a plan with no tie to the clone

@@ -55,7 +55,7 @@ object Graph {
       val e = reattached.union(anchors).where(col("x") =!= col("y"))
       e.union(e.select(col("y").as("x"), col("x").as("y"))).distinct()
     }
-    // the edge count is each round's probe ([[Iterate]]); it rides in the
+    // the edge count is each round's probe (Iterate); it rides in the
     // state, so the next round compares against it instead of re-counting.
     // The anti-join diff only runs when the counts already match (&&
     // short-circuit), i.e. usually exactly once, on the converged round.
@@ -158,7 +158,7 @@ object Graph {
     // round's plan with a LogicalRDD, and the underlying RDD DAG dedupes
     // the three references structurally (the same exponential
     // re-evaluation the c66 ORACLE avoids with MATERIALIZED stages;
-    // [[Iterate]] is the until-converged variant, whose probe actions
+    // Iterate is the until-converged variant, whose probe actions
     // materialize the checkpoints — here no round runs an action, which
     // keeps the builder action-free).
     var e = pairs.select(col("a"), col("b"))
