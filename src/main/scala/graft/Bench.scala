@@ -196,6 +196,12 @@ object Bench {
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "1500").toLong
     val mainStart = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - mainStart) / 1e9
+    // Every timed run (and the JIT warm-up below) executes the whole plan
+    // into the noop sink: the plan Verify writes, minus the file encoding.
+    // A count() would let Catalyst prune the final sort, windows and whole
+    // iterative chains, so the bench would time a different plan.
+    def sink(name: String, dir: String): Unit =
+      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
     // Untimed warmup: JIT/codegen/classloading + parquet footer caches, so
     // the first timed query doesn't absorb several seconds of JVM cold
     // start. Footer-touches the bench tables too (limit(1) — metadata and
@@ -222,7 +228,7 @@ object Bench {
       try new java.io.File(p).getCanonicalPath catch { case _: Throwable => p }
     if (new java.io.File(warmDir).isDirectory && canon(warmDir) != canon(sfDir))
       names.foreach { n =>
-        try SparkEntry.queries(n)(spark, warmDir).count() catch { case _: Throwable => () }
+        try sink(n, warmDir) catch { case _: Throwable => () }
       }
     // SHARED memoized intermediates at the TARGET sf, still untimed (r9
     // VERDICT #3): under min-of-two timing, a shared index cold in both
@@ -271,7 +277,7 @@ object Bench {
       acc.mark()
       val t0 = System.nanoTime()
       try {
-        SparkEntry.queries(name)(spark, sfDir).count()
+        sink(name, sfDir)
         val t = (System.nanoTime() - t0) / 1e9
         if (t < bestSeen.getOrElse(name, Double.MaxValue)) {
           bestSeen(name) = t
@@ -331,17 +337,15 @@ object Bench {
         "\"" + k.takeWhile(_ != '_') + s"""\":[${kb(m.readB)},${kb(m.writeB)},${kb(m.spillB)},${kb(m.peakB)}]"""
       }).mkString("{", ",", "}")
     // Run identity (VERDICT r7 #3): stamp the round so bench_history.py
-    // keys runs by it instead of file position — SPARK_GRAFT_ROUND when the
-    // driver provides it, else inferred as max(BENCH_r*.json)+1 (this run
-    // is producing the NEXT round's artifact); the app id ties re-appended
-    // lines from the same JVM together.
+    // keys runs by it instead of file position. The round comes only from
+    // SPARK_GRAFT_ROUND; without it the field is left out (a guessed round
+    // once stamped an 8-core scaling run as the next round). The app id
+    // ties re-appended lines from the same JVM together, and cpus tells
+    // runs of one round on different core counts apart.
     val round = sys.env.get("SPARK_GRAFT_ROUND").flatMap(r => scala.util.Try(r.toInt).toOption)
-      .getOrElse {
-        val seen = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-          .flatMap(f => "^BENCH_r(\\d+)\\.json$".r.findFirstMatchIn(f.getName).map(_.group(1).toInt))
-        if (seen.isEmpty) 0 else seen.max + 1
-      }
-    val histLine = s"""{"round":$round,"app":"${spark.sparkContext.applicationId}","sf":"$sfDir","unit":"kb_read_write_spill_peak","queries":$mJson}"""
+      .fold("")(r => s""""round":$r,""")
+    val runId = s""""app":"${spark.sparkContext.applicationId}","sf":"$sfDir","cpus":$cpus"""
+    val histLine = s"""{$round$runId,"unit":"kb_read_write_spill_peak","queries":$mJson}"""
     // Companion SECONDS line (r17 VERDICT #2: the driver captures only a
     // ~2 KB stdout tail, so a full per-query map can never ride it — the
     // committed ledger is the only channel that survives; with this line
@@ -360,7 +364,7 @@ object Bench {
     val warmFailJson = warmFailures.take(20).map("\"" + _ + "\"").mkString("[", ",", "]")
     val secJson = results.sortBy(_._1).map { case (k, v) =>
       "\"" + k.takeWhile(_ != '_') + "\":" + fmt2(v) }.mkString("{", ",", "}")
-    val secLine = s"""{"round":$round,"app":"${spark.sparkContext.applicationId}","sf":"$sfDir","unit":"sec","cpus":$cpus,"warm_sec":${fmt2(warmSec)},"runs":${out.runs},"pass_sums":${out.passSums.map(fmt2).mkString("[", ",", "]")},"pass_ends":${out.passEnds.map(fmt2).mkString("[", ",", "]")},"retimes":${out.retimed.size},"warm_failures":$warmFailJson,"queries_sec":$secJson}"""
+    val secLine = s"""{$round$runId,"unit":"sec","warm_sec":${fmt2(warmSec)},"runs":${out.runs},"pass_sums":${out.passSums.map(fmt2).mkString("[", ",", "]")},"pass_ends":${out.passEnds.map(fmt2).mkString("[", ",", "]")},"retimes":${out.retimed.size},"warm_failures":$warmFailJson,"queries_sec":$secJson}"""
     try {
       val dir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_METRICS_DIR", "docs/bench"))
       dir.mkdirs()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.operators.{Ann, Dedup, Multimodal, Nested, Pipeline, Scale, Variant}
 import graft.functions.{Similarity, Text}
-import graft.sources.Tables
+import graft.sources.{Shared, SharedFrame, Tables}
 import graft.streaming.Streams
 
 /** Shared internals of the [[SparkEntry]] driver contract — the memoized
@@ -90,16 +90,12 @@ private[graft] object EntryShared {
     * has a real partsupp table, so per-query standalone cost was never the
     * scale story; the memo is measurement hygiene plus the
     * materialized-view posture the catalog would have at ingest. */
-  private[graft] val psCache = new graft.sources.Memo()
-
-  private[graft] def psDerived(s: SparkSession, d: String): DataFrame =
-    psCache.getOrElseUpdate((s, d)) {
-      t(s, d, "lineitem")
-        .groupBy(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
-        .agg(sum(floor(col("l_quantity") * 10 + 0.5).cast("long")).as("ps_availqty_deci"),
-          min(floor(col("l_extendedprice") * 100 + 0.5).cast("long")).as("ps_supplycost_c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] val psDerived = SharedFrame("psDerived") { (s, d) =>
+    t(s, d, "lineitem")
+      .groupBy(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
+      .agg(sum(floor(col("l_quantity") * 10 + 0.5).cast("long")).as("ps_availqty_deci"),
+        min(floor(col("l_extendedprice") * 100 + 0.5).cast("long")).as("ps_supplycost_c"))
+  }
 
   /** DuckDB twin of [[psDerived]] — splice as `WITH $psCte, ...`. */
   private[graft] val psCte =
@@ -109,52 +105,34 @@ private[graft] object EntryShared {
       |    CAST(min(CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) AS BIGINT) AS ps_supplycost_c
       |  FROM lineitem GROUP BY 1,2)""".stripMargin
 
-  /** Near-dup cluster labels over documents, memoized per (session, sfDir):
-    * c17 and c18 share the pair graph and the CC iterations (same
-    * materialized-view pattern as Tables.orderItems; bounded LRU, evicted
-    * entries unpersisted). */
-  private[graft] val clustersCache = new graft.sources.Memo()
-
   /** The documents shingle index, shared by c02 (minhash), c04 (jaccard)
     * and c17/c18 (clusters over jaccard pairs): one persisted kernel pass
     * per (session, sfDir) instead of three. */
-  private[graft] val shingleCache = new graft.sources.Memo()
-
-  private[graft] def docShingleSets(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate((s, d)) {
-      Dedup.shingleSets(t(s, d, "documents"), "doc_id", "text", shingleN = 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] val docShingleSets = SharedFrame("docShingleSets") { (s, d) =>
+    Dedup.shingleSets(t(s, d, "documents"), "doc_id", "text", shingleN = 3)
+  }
 
   /** The exact-jaccard near-dup pair graph over documents, shared by c04
     * (pair list) and c17/c18 (clusters): the inverted-index join runs once
     * per (session, sfDir). */
-  private[graft] val jaccardPairsCache = new graft.sources.Memo()
+  private[graft] val docJaccardPairs = SharedFrame("docJaccardPairs") { (s, d) =>
+    Dedup.ngramJaccardPairsOf(docShingleSets(s, d), threshold = 0.8)
+  }
 
-  private[graft] def docJaccardPairs(s: SparkSession, d: String): DataFrame =
-    jaccardPairsCache.getOrElseUpdate((s, d)) {
-      Dedup.ngramJaccardPairsOf(docShingleSets(s, d), threshold = 0.8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  private[graft] def docClusters(s: SparkSession, d: String): DataFrame =
-    clustersCache.getOrElseUpdate((s, d)) {
-      Dedup.clusters(docJaccardPairs(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  /** Near-dup cluster labels over documents: c17 and c18 share the pair
+    * graph and the CC iterations. */
+  private[graft] val docClusters = SharedFrame("docClusters") { (s, d) =>
+    Dedup.clusters(docJaccardPairs(s, d))
+  }
 
   /** The minhash signature-agreement candidate pairs (doc_id, dup_of,
     * n_agree) over documents, shared by c37 (the directed arrival-order
     * parity readout) and c120 (the stream consumer's undirected
     * readout, r16): the banded self-join + 64-perm agreement verify
     * runs once per (session, sfDir); both keys are cache reads. */
-  private[graft] val sigPairsCache = new graft.sources.Memo()
-
-  private[graft] def docSigAgreementPairs(s: SparkSession, d: String): DataFrame =
-    sigPairsCache.getOrElseUpdate((s, d)) {
-      Dedup.signatureAgreementPairs(docShingleSets(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] val docSigAgreementPairs = SharedFrame("docSigAgreementPairs") { (s, d) =>
+    Dedup.signatureAgreementPairs(docShingleSets(s, d))
+  }
 
   /** The documents bigram-position table (doc_id, source, w1, w2), shared
     * by c58 (corpus LM: three consumers — two count aggregates + the
@@ -162,20 +140,16 @@ private[graft] object EntryShared {
     * this frame instead of re-scanning the corpus): one explode pass per
     * (session, sfDir) — the "position table cached at ingest" posture the
     * c58 scaladoc promises at 100 TB. */
-  private[graft] val bigramCache = new graft.sources.Memo()
-
-  private[graft] def docBigramsWithSource(s: SparkSession, d: String): DataFrame =
-    bigramCache.getOrElseUpdate((s, d)) {
-      val toks = Text.tokens(col("text"))
-      t(s, d, "documents")
-        .where(size(toks) >= 2)
-        .select(col("doc_id"), col("source"),
-          explode(transform(slice(toks, lit(1), size(toks) - 1),
-            (x, i) => struct(x.as("w1"),
-              element_at(toks, i + lit(2)).as("w2")))).as("p"))
-        .select(col("doc_id"), col("source"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] val docBigramsWithSource = SharedFrame("docBigramsWithSource") { (s, d) =>
+    val toks = Text.tokens(col("text"))
+    t(s, d, "documents")
+      .where(size(toks) >= 2)
+      .select(col("doc_id"), col("source"),
+        explode(transform(slice(toks, lit(1), size(toks) - 1),
+          (x, i) => struct(x.as("w1"),
+            element_at(toks, i + lit(2)).as("w2")))).as("p"))
+      .select(col("doc_id"), col("source"), col("p.w1").as("w1"), col("p.w2").as("w2"))
+  }
 
   /** Per-doc classifier scores + the metadata the consumers read —
     * (doc_id, lang, n_chars, n_feats, score) — shared by the whole
@@ -184,18 +158,14 @@ private[graft] object EntryShared {
     * filter/aggregate over this one frame). The materialized-view
     * posture a real pipeline would keep for its learned gate: score on
     * ingest, consume everywhere. */
-  private[graft] val docScoresCache = new graft.sources.Memo()
-
-  private[graft] def docClassifierScores(s: SparkSession, d: String): DataFrame =
-    docScoresCache.getOrElseUpdate((s, d)) {
-      t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-        .join(graft.operators.Pipeline.linearClassifierScore(
-            t(s, d, "documents"), "doc_id", "text",
-            graft.operators.Pipeline.demoClassifierWeights(s, 65536),
-            buckets = 65536)
-          .withColumnRenamed("id", "doc_id"), "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] val docClassifierScores = SharedFrame("docClassifierScores") { (s, d) =>
+    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
+      .join(graft.operators.Pipeline.linearClassifierScore(
+          t(s, d, "documents"), "doc_id", "text",
+          graft.operators.Pipeline.demoClassifierWeights(s, 65536),
+          buckets = 65536)
+        .withColumnRenamed("id", "doc_id"), "doc_id")
+  }
 
   /** The c110/c112 readout tail: unstack the wide per-lang yield state
     * into (lang, thr, total_docs, kept_docs, kept_chars, kept_ppm) rows —
@@ -220,11 +190,8 @@ private[graft] object EntryShared {
     * machinery per the c114 scaladoc: per-score-value aggregate (one
     * score exchange), cumulative windows on the |distinct scores|-row
     * frame, last-row decile rule. */
-  private[graft] val calibCache = new graft.sources.Memo()
-
-  private[graft] def classifierCalibrationTable(s: SparkSession, d: String): DataFrame =
-    calibCache.getOrElseUpdate((s, d)) { buildCalibrationTable(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) }
+  private[graft] val classifierCalibrationTable =
+    SharedFrame("classifierCalibrationTable")(buildCalibrationTable)
 
   /** Per-doc (doc_id, kept_h, score) gate bits — the narrow frame every
     * calibration-family consumer aggregates. MEMOIZED separately from the
@@ -233,18 +200,14 @@ private[graft] object EntryShared {
     * this memo each slice would re-pay the heuristic full-text scan — the
     * dominant cost of the family. ~3 narrow columns × |docs| rows persisted;
     * raw text never leaves the scan. */
-  private[graft] val gateBitsCache = new graft.sources.Memo()
-
-  private[graft] def docGateBits(s: SparkSession, d: String): DataFrame =
-    gateBitsCache.getOrElseUpdate((s, d)) {
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          (Text.qualityScoreNano(coalesce(col("text"), lit(""))) >=
-            395000000L).as("kept_h"))
-        .join(docClassifierScores(s, d)
-          .select(col("doc_id"), col("score")), "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] val docGateBits = SharedFrame("docGateBits") { (s, d) =>
+    t(s, d, "documents")
+      .select(col("doc_id"),
+        (Text.qualityScoreNano(coalesce(col("text"), lit(""))) >=
+          395000000L).as("kept_h"))
+      .join(docClassifierScores(s, d)
+        .select(col("doc_id"), col("score")), "doc_id")
+  }
 
   private[graft] def buildCalibrationTable(s: SparkSession, d: String): DataFrame =
     calibrationTableOf(docGateBits(s, d))
@@ -288,13 +251,8 @@ private[graft] object EntryShared {
     * the family's materialized view: ≤ 2 arms × 3 transitions × horizon
     * hours rows persisted, the user-scale work paid once per
     * (session, sfDir). */
-  private[graft] val ttcFrameCache = new graft.sources.Memo()
-
-  private[graft] def funnelAbTtcCumFrame(s: SparkSession, d: String): DataFrame =
-    ttcFrameCache.getOrElseUpdate((s, d)) {
-      buildFunnelAbTtcCumFrame(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] val funnelAbTtcCumFrame =
+    SharedFrame("funnelAbTtcCumFrame")(buildFunnelAbTtcCumFrame)
 
   private[graft] def buildFunnelAbTtcCumFrame(s: SparkSession, d: String): DataFrame = {
     val stages = Seq("view", "click", "signup", "purchase")
@@ -340,13 +298,8 @@ private[graft] object EntryShared {
     * |users|-rows, not bucket-bounded — but it is 5 narrow integer/ts
     * columns (the per-user materialized view any funnel deployment keeps),
     * and raw events never persist. */
-  private[graft] val revUserCache = new graft.sources.Memo()
-
-  private[graft] def funnelAbRevUserFrame(s: SparkSession, d: String): DataFrame =
-    revUserCache.getOrElseUpdate((s, d)) {
-      buildFunnelAbRevUserFrame(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] val funnelAbRevUserFrame =
+    SharedFrame("funnelAbRevUserFrame")(buildFunnelAbRevUserFrame)
 
   private[graft] def buildFunnelAbRevUserFrame(s: SparkSession, d: String): DataFrame = {
     val stages = Seq("view", "click", "signup", "purchase")
@@ -410,14 +363,10 @@ private[graft] object EntryShared {
 
   /** The exact cosine pair graph over embeddings, shared by c05 (pair
     * list) and c20 (semantic dedup clusters). */
-  private[graft] val embPairsCache = new graft.sources.Memo()
-
-  private[graft] def embeddingPairGraph(s: SparkSession, d: String): DataFrame =
-    embPairsCache.getOrElseUpdate((s, d)) {
-      Dedup.embeddingPairs(t(s, d, "embeddings"), "vec_id", "embedding",
-          threshold = 0.35)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] val embeddingPairGraph = SharedFrame("embeddingPairGraph") { (s, d) =>
+    Dedup.embeddingPairs(t(s, d, "embeddings"), "vec_id", "embedding",
+      threshold = 0.35)
+  }
 
   /** Semantic-dedup cluster labels over the 0.42-cosine cut of
     * [[embeddingPairGraph]], memoized per (session, sfDir) — r17
@@ -430,15 +379,11 @@ private[graft] object EntryShared {
     * compute and its k× driver-latency surface). Same materialized-view
     * pattern as [[docClusters]]; warmed untimed by
     * [[SparkEntry.warmSharedIntermediates]]. */
-  private[graft] val embClustersCache = new graft.sources.Memo()
-
-  private[graft] def embClusters(s: SparkSession, d: String): DataFrame =
-    embClustersCache.getOrElseUpdate((s, d)) {
-      Dedup.clusters(
-          embeddingPairGraph(s, d).where(col("cos") >= 0.42)
-            .select(col("a"), col("b")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] val embClusters = SharedFrame("embClusters") { (s, d) =>
+    Dedup.clusters(
+      embeddingPairGraph(s, d).where(col("cos") >= 0.42)
+        .select(col("a"), col("b")))
+  }
 
   /** ONE k=3 BPE chain per (session, sfDir), exposing both halves — the
     * learned merge rules (c88) and the compacted corpus (c90) — from the
@@ -450,39 +395,17 @@ private[graft] object EntryShared {
     * surface). No `.persist` on top: both halves are backed by the
     * chain's own localCheckpoint RDDs, so repeat actions already read
     * cached blocks — an extra persist would only duplicate them (the
-    * Memo eviction's unpersist is therefore a harmless no-op here;
-    * dropped frame references let the ContextCleaner reclaim the
-    * checkpoint blocks). Two standard [[graft.sources.Memo]]s (LRU
-    * bound + `clear()` invalidation like every other memo — an in-place
-    * rewrite of the documents table must be able to flush this cache
-    * too), populated from one chain build under a shared lock; the pair
-    * is rebuilt TOGETHER whenever either leg is missing (r17 ADVICE —
-    * an LRU eviction splitting the pair previously left the surviving
-    * leg on the old chain's checkpoints while the other silently
-    * re-paid the whole iteration; now both always reference one chain,
-    * and the displaced leg's blocks fall to the ContextCleaner). */
-  private[graft] val bpe3MergesCache = new graft.sources.Memo()
-  private[graft] val bpe3CorpusCache = new graft.sources.Memo()
-  private val bpe3BuildLock = new Object
+    * eviction's unpersist is therefore a harmless no-op here; dropped
+    * frame references let the ContextCleaner reclaim the checkpoint
+    * blocks). The pair is ONE memo entry, so an LRU eviction drops both
+    * legs together and the two always reference one chain. */
+  private[graft] val bpeK3 = new Shared[(DataFrame, DataFrame)]("bpeK3",
+      { case (merges, corpus) => Seq(merges, corpus) })((s, d) =>
+    graft.operators.Bpe.mergesAndApply(t(s, d, "documents"), "doc_id", "text", k = 3))
 
-  private def bpe3Legs(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    bpe3BuildLock.synchronized {
-      (bpe3MergesCache.peek((s, d)), bpe3CorpusCache.peek((s, d))) match {
-        case (Some(m), Some(c)) => (m, c)
-        case _ =>
-          val pair = graft.operators.Bpe.mergesAndApply(
-            Tables.t(s, d, "documents"), "doc_id", "text", k = 3)
-          bpe3MergesCache.put((s, d), pair._1)
-          bpe3CorpusCache.put((s, d), pair._2)
-          pair
-      }
-    }
+  private[graft] def bpeK3Merges(s: SparkSession, d: String): DataFrame = bpeK3(s, d)._1
 
-  private[graft] def bpeK3Merges(s: SparkSession, d: String): DataFrame =
-    bpe3Legs(s, d)._1
-
-  private[graft] def bpeK3Corpus(s: SparkSession, d: String): DataFrame =
-    bpe3Legs(s, d)._2
+  private[graft] def bpeK3Corpus(s: SparkSession, d: String): DataFrame = bpeK3(s, d)._2
 
   /** The 30-minute session_window frame over events, shared by b20 (the
     * sessionize readout) and b65 (the streaming-parity batch twin) —
@@ -490,13 +413,9 @@ private[graft] object EntryShared {
     * sessionization pass (one user_id exchange + session merge, ~3.9 MB
     * r+w each at sf0.1) for one frame. One persisted build, warmed
     * untimed; b65's watermark filter sits on top of the cache read. */
-  private[graft] val sessionCache = new graft.sources.Memo()
-
-  private[graft] def sessionCounts30(s: SparkSession, d: String): DataFrame =
-    sessionCache.getOrElseUpdate((s, d)) {
-      Streams.sessionCounts(t(s, d, "events"), "30 minutes")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] val sessionCounts30 = SharedFrame("sessionCounts30") { (s, d) =>
+    Streams.sessionCounts(t(s, d, "events"), "30 minutes")
+  }
 
   /** The capped inverted-index co-count frame (a, b, inter, sza, szb)
     * over [[docShingleSets]], memoized per (session, sfDir) — r17
@@ -512,13 +431,9 @@ private[graft] object EntryShared {
     * warmed untimed, so rerouting it would buy zero timed bytes while
     * changing the plan lineage of the whole doc-CC oracle class (whose
     * sf0.1 re-verification budget is 30–60 min/key). */
-  private[graft] val coCountsCache = new graft.sources.Memo()
-
-  private[graft] def docCoCounts(s: SparkSession, d: String): DataFrame =
-    coCountsCache.getOrElseUpdate((s, d)) {
-      Dedup.cappedCoCounts(docShingleSets(s, d), maxPosting = 10000)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] val docCoCounts = SharedFrame("docCoCounts") { (s, d) =>
+    Dedup.cappedCoCounts(docShingleSets(s, d), maxPosting = 10000)
+  }
 
   private[graft] def q1Agg(s: SparkSession, d: String): DataFrame =
     t(s, d, "lineitem")

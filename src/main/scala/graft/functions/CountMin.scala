@@ -126,7 +126,7 @@ object CountMin {
     * memo assumes scanned inputs are immutable for the app's life; if a
     * table's files are rewritten in place, call [[invalidateSketchCache]]
     * first. */
-  private val sketchMemo = new graft.sources.Memo(maxEntries = 8)
+  private val sketchMemo = new graft.sources.Memo[DataFrame](maxEntries = 8)(_.unpersist())
 
   /** Explicit invalidation hook for [[joinOrderAdvisor]]'s sketch memo —
     * required after an in-place rewrite of a previously-advised table. */

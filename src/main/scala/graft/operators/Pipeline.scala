@@ -891,7 +891,7 @@ object Pipeline {
     * semanticHash, whose collisions would silently serve the wrong member
     * set). Plan-keyed ⇒ assumes the key table is immutable for the app's
     * life; after an in-place rewrite call [[invalidateMemberHashCache]]. */
-  private val memberHashMemo = new graft.sources.Memo(maxEntries = 4)
+  private val memberHashMemo = new graft.sources.Memo[DataFrame](maxEntries = 4)(_.unpersist())
 
   /** Explicit invalidation hook for [[bloomAdvisor]]'s member-hash memo —
     * required after an in-place rewrite of a previously-advised key table. */

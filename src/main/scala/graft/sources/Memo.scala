@@ -1,28 +1,29 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** Bounded memoizer for persisted per-(session, sfDir) DataFrames (the
-  * materialized-view caches: Tables.orderItems, SparkEntry.docClusters).
+/** Bounded memoizer for per-(session, key) values: the shared
+  * intermediates ([[Shared]]) and the plan-keyed advisor caches
+  * (`Pipeline.bloomAdvisor`, `CountMin.joinOrderAdvisor`).
   *
   * An unbounded ConcurrentHashMap would pin cached blocks and SparkSession
   * references for the life of the JVM; this LRU evicts beyond `maxEntries`
-  * and unpersists the evicted DataFrame so its storage is released. Sized
-  * for the realistic working set (a handful of (session, scale-factor)
-  * combinations), not as a general cache.
+  * and `release`s the evicted value (unpersisting its frames) so its
+  * storage is released. Sized for the realistic working set (a handful of
+  * (session, scale-factor) combinations), not as a general cache.
   */
-private[graft] final class Memo(maxEntries: Int = 8) {
+private[graft] final class Memo[V](maxEntries: Int = 8)(release: V => Unit) {
   private type K = (SparkSession, String)
 
-  private val m = new java.util.LinkedHashMap[K, DataFrame](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[K, DataFrame]): Boolean =
-      if (size() > maxEntries) {
-        try e.getValue.unpersist() catch { case _: Exception => () }
-        true
-      } else false
+  private def quietly(v: V): Unit = try release(v) catch { case _: Exception => () }
+
+  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+      if (size() > maxEntries) { quietly(e.getValue); true } else false
   }
 
-  def getOrElseUpdate(k: K)(f: => DataFrame): DataFrame = m.synchronized {
+  def getOrElseUpdate(k: K)(f: => V): V = m.synchronized {
     val v = m.get(k)
     if (v != null) v
     else {
@@ -32,32 +33,58 @@ private[graft] final class Memo(maxEntries: Int = 8) {
     }
   }
 
-  /** Non-building read — present iff cached (touches LRU recency). */
-  def peek(k: K): Option[DataFrame] = m.synchronized(Option(m.get(k)))
-
-  /** Overwriting insert, for callers that must keep SIBLING entries
-    * consistent (the bpe3 merges/corpus pair is rebuilt together from
-    * one chain — r17 ADVICE). The displaced frame is unpersisted like
-    * every other removal path (eviction, clear) so the class invariant
-    * holds for any future caller; on checkpoint-backed frames (the bpe3
-    * pair) Dataset.unpersist is a CacheManager no-op and their blocks
-    * fall to the ContextCleaner once unreferenced. */
-  def put(k: K, v: DataFrame): Unit = m.synchronized {
-    val prev = m.put(k, v)
-    if (prev != null && (prev ne v))
-      try prev.unpersist() catch { case _: Exception => () }
-  }
-
-  /** Explicit invalidation hook: unpersist and drop every cached entry.
+  /** Explicit invalidation hook: release and drop every cached entry.
     * Callers whose underlying data changed in-place (same path, rewritten
     * files — the one case a plan-derived key cannot see) must call this
     * before reusing a memoized builder. */
   def clear(): Unit = m.synchronized {
-    m.values.forEach { df =>
-      try df.unpersist() catch { case _: Exception => () }
-    }
+    m.values.forEach(quietly(_))
     m.clear()
   }
+}
+
+/** A per-(session, sfDir) intermediate that several query keys share: built
+  * once per (session, sfDir) by `build`, kept in a bounded [[Memo]] (LRU of
+  * 8, frames unpersisted on eviction), and registered under `name` when it
+  * is declared. `frames` lists the DataFrames a value holds: the bench's
+  * warm pass ([[warm]]) materializes each, and eviction unpersists each.
+  *
+  * Declaring one is the whole contract: [[Shared.registered]] is what
+  * `SparkEntry.warmSharedIntermediates` warms, so no list of names is kept
+  * anywhere else. [[SharedFrame]] is the persisted single-frame case. */
+private[graft] class Shared[V](val name: String, frames: V => Seq[DataFrame])(
+    build: (SparkSession, String) => V) {
+  private val memo = new Memo[V]()(v => frames(v).foreach(_.unpersist()))
+  Shared.register(this)
+
+  def apply(s: SparkSession, d: String): V = memo.getOrElseUpdate((s, d))(build(s, d))
+
+  /** Build (if needed) and materialize every frame for (s, d). */
+  def warm(s: SparkSession, d: String): Unit = frames(apply(s, d)).foreach(_.count())
+}
+
+private[graft] object Shared {
+  private val registry = scala.collection.mutable.ArrayBuffer.empty[Shared[_]]
+
+  private def register(x: Shared[_]): Unit = registry.synchronized { registry += x }
+
+  /** Every declared shared intermediate, in registration order. Only
+    * objects already initialized have registered theirs: a caller that
+    * needs all of them initializes the declaring objects first. */
+  def registered: Seq[Shared[_]] = registry.synchronized(registry.toList)
+}
+
+/** A shared intermediate that is one DataFrame, persisted
+  * `MEMORY_AND_DISK` (spill-backed, so it degrades rather than OOMs when
+  * the frame outgrows executor memory): the materialized-view posture,
+  * paid once per (session, sfDir), read by every consumer. */
+private[graft] final class SharedFrame(name: String)(build: (SparkSession, String) => DataFrame)
+    extends Shared[DataFrame](name, Seq(_))(
+      (s, d) => build(s, d).persist(StorageLevel.MEMORY_AND_DISK))
+
+private[graft] object SharedFrame {
+  def apply(name: String)(build: (SparkSession, String) => DataFrame): SharedFrame =
+    new SharedFrame(name)(build)
 }
 
 private[graft] object Memo {

@@ -108,23 +108,18 @@ object Tables {
     * shuffle any per-order pipeline needs and partitions by a dense,
     * well-distributed key.
     *
-    * The result is persisted (memory-with-disk-spill) and memoized per
-    * (session, sfDir) — nine §2A queries derive from this one intermediate,
-    * so it's the materialized-view case: pay the shuffle once per session,
-    * not per query. Spill-backed, so it degrades gracefully rather than
-    * OOMing when the fixture outgrows executor memory.
+    * A [[SharedFrame]] (persisted, memoized per (session, sfDir)): nine
+    * §2A queries derive from this one intermediate, so it's the
+    * materialized-view case — pay the shuffle once per session, not per
+    * query.
     */
-  private val orderItemsCache = new Memo()
-
-  def orderItems(spark: SparkSession, sfDir: String): DataFrame =
-    orderItemsCache.getOrElseUpdate((spark, sfDir)) {
-      t(spark, sfDir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_list(struct(
-          col("l_linenumber").as("ln"),
-          col("l_quantity").as("qty"),
-          col("l_extendedprice").as("price"),
-          col("l_discount").as("disc")))).as("items"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  val orderItems: SharedFrame = SharedFrame("orderItems") { (spark, sfDir) =>
+    t(spark, sfDir, "lineitem")
+      .groupBy(col("l_orderkey"))
+      .agg(sort_array(collect_list(struct(
+        col("l_linenumber").as("ln"),
+        col("l_quantity").as("qty"),
+        col("l_extendedprice").as("price"),
+        col("l_discount").as("disc")))).as("items"))
+  }
 }

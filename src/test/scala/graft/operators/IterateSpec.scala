@@ -45,16 +45,27 @@ class IterateSpec extends AnyFunSuite {
   * AQE session (6 jobs). */
 class IterateJobsSpec extends SparkSpec {
 
+  private def chainPairs = {
+    val s = spark; import s.implicits._
+    (0 until 64).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
+  }
+
   test("clusters and followChain run one probe action per round") {
     val s = spark; import s.implicits._
-    val pairs = (0 until 64).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
     val chain = (0L until 64L).map(i => (i, if (i == 0) None else Some(i - 1)))
       .toDF("id", "mgr")
     // 6 edge-count jobs + 1 init probe + 6 round probes + 9 broadcasts.
     // With an eager checkpoint and a separate label-sum per round it was 29.
-    assert(jobsDuring(Dedup.clusters(pairs)) == 22)
+    assert(jobsDuring(Dedup.clusters(chainPairs)) == 22)
     // 7 round probes + 2 broadcasts. With two eager checkpoints and a count
     // per round, plus the same three before the first round, it was 28.
     assert(jobsDuring(Variant.followChain(chain, "id", "mgr")) == 9)
+  }
+
+  test("stars CC runs one probe per round and one converged-round check") {
+    // 1 init count + 7 round probes + 30 broadcasts + 1 anti-join check.
+    // The check's isEmpty is one job: its limit(1) collects through a
+    // single-partition exchange, so it does not re-run per partition range.
+    assert(jobsDuring(Graph.connectedComponentsStars(chainPairs)) == 39)
   }
 }

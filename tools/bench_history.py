@@ -79,7 +79,11 @@ def shuffle_drift_section():
             e = json.loads(line)
         except ValueError:
             continue
-        rnd = e.get("round", -1)
+        # a line without a round (a dev run, no SPARK_GRAFT_ROUND) belongs
+        # to no round's series
+        if "round" not in e:
+            continue
+        rnd = e["round"]
         for q, v in e.get("queries", {}).items():
             # byte rows are [read, write, spill, peak] lists; ignore any
             # other shape (the r18 "unit":"sec" companion lines keep their
