@@ -191,7 +191,7 @@ private[graft] object EntryShared {
     * score exchange), cumulative windows on the |distinct scores|-row
     * frame, last-row decile rule. */
   private[graft] val classifierCalibrationTable =
-    SharedFrame("classifierCalibrationTable")(buildCalibrationTable)
+    SharedFrame("classifierCalibrationTable")((s, d) => calibrationTableOf(docGateBits(s, d)))
 
   /** Per-doc (doc_id, kept_h, score) gate bits — the narrow frame every
     * calibration-family consumer aggregates. MEMOIZED separately from the
@@ -208,9 +208,6 @@ private[graft] object EntryShared {
       .join(docClassifierScores(s, d)
         .select(col("doc_id"), col("score")), "doc_id")
   }
-
-  private[graft] def buildCalibrationTable(s: SparkSession, d: String): DataFrame =
-    calibrationTableOf(docGateBits(s, d))
 
   /** The c114 decile machinery over any (score, kept_h) bits frame — ONE
     * definition shared by the full-corpus table (c114/c116 via the memo)
@@ -251,10 +248,7 @@ private[graft] object EntryShared {
     * the family's materialized view: ≤ 2 arms × 3 transitions × horizon
     * hours rows persisted, the user-scale work paid once per
     * (session, sfDir). */
-  private[graft] val funnelAbTtcCumFrame =
-    SharedFrame("funnelAbTtcCumFrame")(buildFunnelAbTtcCumFrame)
-
-  private[graft] def buildFunnelAbTtcCumFrame(s: SparkSession, d: String): DataFrame = {
+  private[graft] val funnelAbTtcCumFrame = SharedFrame("funnelAbTtcCumFrame") { (s, d) =>
     val stages = Seq("view", "click", "signup", "purchase")
     val staged = graft.operators.Series.funnelStageTimes(
       t(s, d, "events").where(col("event_type").isin(stages: _*)),
@@ -298,10 +292,7 @@ private[graft] object EntryShared {
     * |users|-rows, not bucket-bounded — but it is 5 narrow integer/ts
     * columns (the per-user materialized view any funnel deployment keeps),
     * and raw events never persist. */
-  private[graft] val funnelAbRevUserFrame =
-    SharedFrame("funnelAbRevUserFrame")(buildFunnelAbRevUserFrame)
-
-  private[graft] def buildFunnelAbRevUserFrame(s: SparkSession, d: String): DataFrame = {
+  private[graft] val funnelAbRevUserFrame = SharedFrame("funnelAbRevUserFrame") { (s, d) =>
     val stages = Seq("view", "click", "signup", "purchase")
     val ev = t(s, d, "events").where(col("event_type").isin(stages: _*))
     val staged = graft.operators.Series.funnelStageTimes(
