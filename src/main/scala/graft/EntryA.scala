@@ -167,7 +167,7 @@ private[graft] object EntryA {
     "a19_pointer_gather" -> ((s, d) => {
       val e = t(s, d, "events").select(col("event_id"), col("user_id"))
       Variant.gather(e, "user_id", t(s, d, "customer").select(col("c_custkey"), col("c_name")),
-          "c_custkey", broadcastTarget = true)
+          "c_custkey")
         .select(col("event_id"), col("user_id"), col("c_name"))
         .orderBy(col("event_id"))
     }),

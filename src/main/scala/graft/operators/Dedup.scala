@@ -564,16 +564,6 @@ object Dedup {
       .select(col("a"), col("b"))
   }
 
-  /** [[prefixJaccardPairsOf]] from raw text (shingle index built inline —
-    * share a persisted [[shingleSets]] via the `...Of` form when running
-    * several similarity operators over one corpus). */
-  def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                         shingleN: Int = 3, tNum: Int = 4, tDen: Int = 5): DataFrame =
-    prefixJaccardPairsOf(
-      shingleSets(df, idCol, textCol, shingleN)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      tNum, tDen)
-
   /** 60-bit hash of the canonical form of a text column (lowercase +
     * punctuation map + empty-token drop — the c71 normalization), for
     * grouping without ever shuffling raw text. */

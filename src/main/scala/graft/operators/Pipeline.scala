@@ -486,12 +486,11 @@ object Pipeline {
     * persisted one) and an eval-membership predicate on the id.
     *
     * Scale: both sides explode to (shingle, id) and equi-join on the
-    * shingle hash — the inverted-index shape. With `broadcastEval` (the
-    * default — a real benchmark suite is tiny next to the corpus) the
-    * training side — the 100 TB side — is never shuffled for the join;
-    * only the matched (train, eval) rows reach the overlap aggregation.
-    * Pass `broadcastEval = false` when the eval set is a large corpus
-    * fraction and should shuffle-join instead. Never all-pairs.
+    * shingle hash — the inverted-index shape. The eval side is broadcast
+    * (a real benchmark suite is tiny next to the corpus), so the training
+    * side — the 100 TB side — is never shuffled for the join; only the
+    * matched (train, eval) rows reach the overlap aggregation. Never
+    * all-pairs.
     *
     * r18 (guide §2.3): both exploded sides are made per-id distinct at
     * the source (a narrow array_distinct — free on [[Dedup.shingleSets]]
@@ -504,13 +503,13 @@ object Pipeline {
     * operator's big compression step (c25: 11.8 → 1.6 MB r+w).
     */
   def contamination(sets: DataFrame, isEval: Column,
-                    minShingles: Int = 5, broadcastEval: Boolean = true): DataFrame = {
+                    minShingles: Int = 5): DataFrame = {
     require(minShingles >= 1, s"minShingles must be >= 1, got $minShingles")
     val ev = sets.where(isEval)
       .select(col("id").as("eval_id"), explode(array_distinct(col("hs"))).as("g"))
     val tr = sets.where(!isEval)
       .select(col("id").as("train_id"), explode(array_distinct(col("hs"))).as("g"))
-    tr.join(if (broadcastEval) broadcast(ev) else ev, "g")
+    tr.join(broadcast(ev), "g")
       .groupBy(col("train_id"), col("eval_id"))
       .agg(count(lit(1)).as("novl"))
       .where(col("novl") >= minShingles)

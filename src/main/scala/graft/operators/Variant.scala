@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *    `offsets` are a physical trick we do not replicate (§4.3).
   *  - Pointer → an ordinary integer key column + an explicit `gather`
   *    (equi-join) against the target table. At 100 TB a gather is a shuffle
-  *    join on the key — or a broadcast join when the target is a dim table,
-  *    which callers opt into with `broadcastTarget = true`.
+  *    join on the key; `gather` broadcasts the target, which is a dim
+  *    table at every call site.
   */
 object Variant {
 
@@ -46,11 +46,10 @@ object Variant {
 
   /** Pointer dereference (`oamap/proxy.py` PointerGenerator behavior):
     * follow `positions[i]` into the target's value space. Expressed as an
-    * equi-join; broadcast when the target is small.
+    * equi-join against the broadcast target (a small dim table).
     */
-  def gather(df: DataFrame, pointerCol: String, target: DataFrame, targetKey: String,
-             broadcastTarget: Boolean = false): DataFrame = {
-    val t = if (broadcastTarget) broadcast(target) else target
+  def gather(df: DataFrame, pointerCol: String, target: DataFrame, targetKey: String): DataFrame = {
+    val t = broadcast(target)
     df.join(t, col(pointerCol) === t(targetKey), "left")
   }
 
@@ -136,10 +135,8 @@ object Variant {
   }
 
   /** Inverse of [[normalize]]: join the sub-object columns back by key and
-    * drop the key. Broadcast the dimension side when it is small. */
-  def denormalize(fact: DataFrame, dim: DataFrame, keyCol: String,
-                  broadcastDim: Boolean = true): DataFrame = {
-    val d = if (broadcastDim) broadcast(dim) else dim
-    fact.join(d, Seq(keyCol)).drop(keyCol)
-  }
+    * drop the key. The dimension side is broadcast: it holds one row per
+    * distinct sub-object. */
+  def denormalize(fact: DataFrame, dim: DataFrame, keyCol: String): DataFrame =
+    fact.join(broadcast(dim), Seq(keyCol)).drop(keyCol)
 }

@@ -44,47 +44,26 @@ private[graft] final class Memo[V](maxEntries: Int = 8)(release: V => Unit) {
 }
 
 /** A per-(session, sfDir) intermediate that several query keys share: built
-  * once per (session, sfDir) by `build`, kept in a bounded [[Memo]] (LRU of
-  * 8, frames unpersisted on eviction), and registered under `name` when it
-  * is declared. `frames` lists the DataFrames a value holds: the bench's
-  * warm pass ([[warm]]) materializes each, and eviction unpersists each.
-  *
-  * Declaring one is the whole contract: [[Shared.registered]] is what
-  * `SparkEntry.warmSharedIntermediates` warms, so no list of names is kept
-  * anywhere else. [[SharedFrame]] is the persisted single-frame case. */
-private[graft] class Shared[V](val name: String, frames: V => Seq[DataFrame])(
+  * once per (session, sfDir) by `build` and kept in a bounded [[Memo]] (LRU
+  * of 8). `frames` lists the DataFrames a value holds; eviction unpersists
+  * each. [[SharedFrame]] is the persisted single-frame case. */
+private[graft] class Shared[V](frames: V => Seq[DataFrame])(
     build: (SparkSession, String) => V) {
   private val memo = new Memo[V]()(v => frames(v).foreach(_.unpersist()))
-  Shared.register(this)
 
   def apply(s: SparkSession, d: String): V = memo.getOrElseUpdate((s, d))(build(s, d))
-
-  /** Build (if needed) and materialize every frame for (s, d). */
-  def warm(s: SparkSession, d: String): Unit = frames(apply(s, d)).foreach(_.count())
-}
-
-private[graft] object Shared {
-  private val registry = scala.collection.mutable.ArrayBuffer.empty[Shared[_]]
-
-  private def register(x: Shared[_]): Unit = registry.synchronized { registry += x }
-
-  /** Every declared shared intermediate, in registration order. Only
-    * objects already initialized have registered theirs: a caller that
-    * needs all of them initializes the declaring objects first. */
-  def registered: Seq[Shared[_]] = registry.synchronized(registry.toList)
 }
 
 /** A shared intermediate that is one DataFrame, persisted
   * `MEMORY_AND_DISK` (spill-backed, so it degrades rather than OOMs when
   * the frame outgrows executor memory): the materialized-view posture,
   * paid once per (session, sfDir), read by every consumer. */
-private[graft] final class SharedFrame(name: String)(build: (SparkSession, String) => DataFrame)
-    extends Shared[DataFrame](name, Seq(_))(
+private[graft] final class SharedFrame(build: (SparkSession, String) => DataFrame)
+    extends Shared[DataFrame](Seq(_))(
       (s, d) => build(s, d).persist(StorageLevel.MEMORY_AND_DISK))
 
 private[graft] object SharedFrame {
-  def apply(name: String)(build: (SparkSession, String) => DataFrame): SharedFrame =
-    new SharedFrame(name)(build)
+  def apply(build: (SparkSession, String) => DataFrame): SharedFrame = new SharedFrame(build)
 }
 
 private[graft] object Memo {

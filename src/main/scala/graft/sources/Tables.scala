@@ -113,7 +113,7 @@ object Tables {
     * materialized-view case — pay the shuffle once per session, not per
     * query.
     */
-  val orderItems: SharedFrame = SharedFrame("orderItems") { (spark, sfDir) =>
+  val orderItems: SharedFrame = SharedFrame { (spark, sfDir) =>
     t(spark, sfDir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_list(struct(

@@ -1,33 +1,30 @@
 package graft
 
-/** The shared-intermediate registry: declaring a [[graft.sources.Shared]]
-  * is what gets it warmed, and a warm pass over a warm session builds
-  * nothing new. */
+/** The bench's untimed pass ([[Bench.warm]]) over keys that read shared
+  * frames or write at-rest layouts: it builds what those keys read, and a
+  * second pass over a warm session builds nothing new. */
 class SharedSpec extends SparkSpec {
-  /** A private copy of the sf0.001 tables: the warm pass materializes every
-    * shared cache, and at the shared path that would change the embedded
-    * cache plans other suites (PlanSpec) inspect. */
-  private lazy val sf: String = {
-    val dir = tempDir("graft-shared")
-    graft.sources.Tables.all.foreach { n =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"/root/testdata/sf0.001/$n.parquet"), dir.resolve(s"$n.parquet"))
-    }
-    dir.toString
-  }
+  private lazy val sf: String = sf0001Copy("graft-shared")
 
-  test("the registry holds orderItems and the BPE pair under distinct names") {
-    val names = SparkEntry.sharedIntermediates.map(_.name)
-    assert(names.contains("orderItems") && names.contains("bpeK3"), names)
-    assert(names.distinct == names, names)
-  }
-
-  test("warmSharedIntermediates warms every shared frame; a second call pins nothing new") {
-    assert(SparkEntry.warmSharedIntermediates(spark, sf) == Seq.empty)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    assert(SparkEntry.warmSharedIntermediates(spark, sf) == Seq.empty)
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.isEmpty, s"persistent RDDs added by the second warm pass: $added")
+  test("the untimed pass fully caches what its keys persist; a second pass pins nothing new") {
+    // c40/c36 read shared frames (embClusters, the doc shingle index) and
+    // c88/c90 the two legs of the BPE pair (c88 alone never computes the
+    // corpus leg's last checkpoint); b33/b37 write at-rest layouts; c36
+    // also persists its band index inside its builder
+    val keys = SparkEntry.select(Seq("c40", "c88", "c90", "b33", "b37", "c36"))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    assert(Bench.warm(spark, keys, sf) == Seq.empty)
+    val first = sc.getPersistentRDDs.keySet -- before
+    assert(first.nonEmpty, "the pass persisted nothing")
+    val cached = sc.getRDDStorageInfo.map(i => i.id -> i).toMap
+    val partial = first.filterNot(id =>
+      cached.get(id).exists(i => i.numCachedPartitions == i.numPartitions))
+    assert(partial.isEmpty, "persisted RDDs not fully cached after the pass: " +
+      partial.map(id => s"${sc.getPersistentRDDs(id)} ${cached.get(id)}").mkString("; "))
+    assert(Bench.warm(spark, keys, sf) == Seq.empty)
+    val added = sc.getPersistentRDDs.keySet -- before -- first
+    assert(added.isEmpty, s"persistent RDDs added by the second pass: $added")
   }
 
   test("both legs of the BPE pair come from one memo entry") {

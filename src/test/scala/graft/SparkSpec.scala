@@ -24,6 +24,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     p
   }
 
+  /** A private copy of the sf0.001 tables in a suite temp dir: a test that
+    * materializes shared caches there leaves the caches (and the embedded
+    * cache plans other suites inspect) at the shared path untouched. */
+  def sf0001Copy(prefix: String): String = {
+    val dir = tempDir(prefix)
+    graft.sources.Tables.all.foreach { n =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"/root/testdata/sf0.001/$n.parquet"), dir.resolve(s"$n.parquet"))
+    }
+    dir.toString
+  }
+
   /** Spark jobs started while `f` runs, on this thread's job group. A
     * marker job started afterwards flushes the listener bus: its start
     * event is delivered after every earlier one. */

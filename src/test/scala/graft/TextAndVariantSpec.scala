@@ -144,7 +144,7 @@ class TextAndVariantSpec extends SparkSpec {
     val s = spark; import s.implicits._
     val src = Seq((1L, 10L), (2L, 11L), (3L, 99L)).toDF("id", "ptr")
     val target = Seq((10L, "a"), (11L, "b")).toDF("key", "name")
-    val g = Variant.gather(src, "ptr", target, "key", broadcastTarget = true)
+    val g = Variant.gather(src, "ptr", target, "key")
       .orderBy("id").collect()
     assert(g.length == 3)
     assert(g(0).getString(3) == "a" && g(2).isNullAt(3)) // dangling pointer -> null
@@ -193,11 +193,9 @@ class TextAndVariantSpec extends SparkSpec {
     val org = Seq((1L, None: Option[Long], "ceo"), (2L, Some(1L), "vp"),
       (3L, Some(2L), "eng"), (4L, Some(2L), "eng2")).toDF("id", "mgr", "name")
     val up1 = Variant.gather(org, "mgr",
-        org.select(col("id").as("m_id"), col("mgr").as("m_mgr")), "m_id",
-        broadcastTarget = true)
+        org.select(col("id").as("m_id"), col("mgr").as("m_mgr")), "m_id")
     val up2 = Variant.gather(up1, "m_mgr",
-        org.select(col("id").as("g_id"), col("name").as("g_name")), "g_id",
-        broadcastTarget = true)
+        org.select(col("id").as("g_id"), col("name").as("g_name")), "g_id")
     val grands = up2.select(col("id"), col("g_name")).orderBy("id").collect()
     assert(grands.map(r => Option(r.getString(1))).toSeq ==
       Seq(None, None, Some("ceo"), Some("ceo")))
