@@ -84,9 +84,9 @@ private[graft] object EntryShared {
     * (r11 VERDICT #3): five queries consume this catalog, and without the
     * cache each re-ran the full lineitem aggregate (~84 MB of repeated
     * shuffle across the partsupp TPC-H family at sf0.1). One persisted
-    * build per (session, sfDir) — built in the bench's untimed pass —
-    * makes every consumer's byte ledger
-    * measure its OWN joins, not the shared derivation. A real deployment
+    * build per (session, sfDir), paid in the bench's untimed pass, makes
+    * every consumer's byte ledger measure its OWN joins, not the shared
+    * derivation. A real deployment
     * has a real partsupp table, so per-query standalone cost was never the
     * scale story; the memo is measurement hygiene plus the
     * materialized-view posture the catalog would have at ingest. */

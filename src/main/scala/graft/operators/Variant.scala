@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *    exactly one possibility is non-null per value. Dense per-branch
   *    `offsets` are a physical trick we do not replicate (§4.3).
   *  - Pointer → an ordinary integer key column + an explicit `gather`
-  *    (equi-join) against the target table. At 100 TB a gather is a shuffle
-  *    join on the key; `gather` broadcasts the target, which is a dim
-  *    table at every call site.
+  *    (equi-join) against the target table, which `gather` broadcasts: at
+  *    every call site the target is a dim table. A fact-sized target at
+  *    100 TB would need a shuffle join on the key instead.
   */
 object Variant {
 
