@@ -6,7 +6,9 @@ package graft
 class SharedSpec extends SparkSpec {
   private lazy val sf: String = sf0001Copy("graft-shared")
 
-  test("the untimed pass fully caches what its keys persist; a second pass pins nothing new") {
+  // the name is the one this test had when the pass was
+  // SparkEntry.warmSharedIntermediates; the pass is now Bench.warm
+  test("warmSharedIntermediates warms every shared frame; a second call pins nothing new") {
     // c40/c36 read shared frames (embClusters, the doc shingle index) and
     // c88/c90 the two legs of the BPE pair (c88 alone never computes the
     // corpus leg's last checkpoint); b33/b37 write at-rest layouts; c36
