@@ -47,18 +47,20 @@ object Bench {
         Thread.sleep(10)
     }
     def mark(): Unit = { quiesce(); peak.set(0L); m0 = (read.get, write.get, spill.get) }
-    /** (shuffle read, shuffle write, spill) bytes since mark + peak task memory. */
-    def delta(): (Long, Long, Long, Long) = {
+    /** The window since mark, `sec` long: shuffle read, shuffle write and
+      * spill bytes, and the peak task memory. */
+    def delta(sec: Double): RunMetrics = {
       quiesce()
-      (read.get - m0._1, write.get - m0._2, spill.get - m0._3, peak.get)
+      RunMetrics(sec, read.get - m0._1, write.get - m0._2, spill.get - m0._3, peak.get)
     }
   }
 
-  /** Per-query metrics of the run that set the best time. */
-  final case class QueryMetrics(readB: Long, writeB: Long, spillB: Long, peakB: Long)
+  /** Seconds and task metrics of one run: a key's fastest timed run, or the
+    * whole untimed pass. */
+  final case class RunMetrics(sec: Double, readB: Long, writeB: Long, spillB: Long, peakB: Long)
 
-  /** Result of the adaptive min-of-runs schedule: per-query best times
-    * (-1 = failed in some run — failures dominate, they never masquerade as
+  /** Result of the adaptive min-of-runs schedule: per-query best times in
+    * name order (-1 = failed in some run — failures dominate, they never masquerade as
     * fast queries), number of FULL passes completed, per-pass sums and wall
     * timestamps, and the queries re-timed by the outlier rounds. */
   final case class Outcome(
@@ -152,22 +154,81 @@ object Bench {
       passes, passSums.toSeq, passEnds.toSeq, retimed.toSeq)
   }
 
+  /** Everything one Bench run reports; its stdout lines and its ledger line
+    * are all derived from it. `timed` holds each key's fastest successful
+    * run (a key that never succeeded has none), while `outcome.best` holds
+    * the reported seconds, -1 for a key that failed in any run. */
+  final case class RunRecord(outcome: Outcome, timed: Map[String, RunMetrics],
+                             warm: RunMetrics, warmFailures: Seq[String])
+
+  /** A key's id, the part of its name before the first underscore. */
+  private def id(name: String): String = name.takeWhile(_ != '_')
+  private def str(s: String): String = "\"" + s + "\""
+  private def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
+  private def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+  private def list(xs: Seq[String]): String = xs.mkString("[", ",", "]")
+  private def obj(kv: Seq[(String, String)]): String =
+    kv.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+  // bounded, so the line never grows with the key count
+  private def warmFailuresJson(rec: RunRecord): String = list(rec.warmFailures.take(20).map(str))
+
   /** The one per-query stdout line, keyed by id prefix (a01.., b01..):
     * failed keys (-1) first, then the costliest, cut before the line would
     * pass `maxChars`. `"n"` is the number of keys run; the full per-key map
-    * is the `queries_sec` ledger line. */
+    * is the ledger line's `queries_sec`. */
   def perQueryLine(results: Seq[(String, Double)], maxChars: Int = 1024): String = {
     val head = """{"per_query_sec":{"""
     val tail = s"""},"n":${results.size}}"""
     val entries = results
       .sortBy { case (_, v) => if (v < 0) Double.MinValue else -v }
-      .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" +
-        "%.2f".formatLocal(java.util.Locale.ROOT, v) }
+      .map { case (k, v) => str(id(k)) + ":" + f2(v) }
     // each entry costs its length plus one separator; the first has none
     val budget = maxChars - head.length - tail.length + 1
     val ends = entries.scanLeft(0)(_ + _.length + 1).tail
     val kept = entries.zip(ends).takeWhile(_._2 <= budget).map(_._1)
     kept.mkString(head, ",", tail)
+  }
+
+  /** The run's one ledger line. `queries` holds a KB row [read, write,
+    * spill, peak] per key, `__warm__` (the untimed pass) first, from the
+    * run that set the key's best time; `queries_sec` holds every key's
+    * seconds. `round` is there only when given: a dev run belongs to no
+    * round. `app` ties lines from one JVM together, and `cpus` tells runs
+    * of one round on different core counts apart. */
+  def ledgerLine(rec: RunRecord, round: Option[Int], app: String, sf: String, cpus: Int): String = {
+    val o = rec.outcome
+    def kb(m: RunMetrics) = list(Seq(m.readB, m.writeB, m.spillB, m.peakB).map(b => (b >> 10).toString))
+    val rows = ("__warm__" -> kb(rec.warm)) +: rec.timed.toSeq.sortBy(_._1).map { case (k, m) => id(k) -> kb(m) }
+    round.fold("{")(r => s"""{"round":$r,""") +
+      s""""app":${str(app)},"sf":${str(sf)},"cpus":$cpus,"warm_sec":${f2(rec.warm.sec)},""" +
+      s""""runs":${o.runs},"pass_sums":${list(o.passSums.map(f2))},"pass_ends":${list(o.passEnds.map(f2))},""" +
+      s""""retimed":${list(o.retimed.map(str))},"warm_failures":${warmFailuresJson(rec)},""" +
+      s""""units":{"queries":"kb_read_write_spill_peak","queries_sec":"sec"},""" +
+      s""""queries":${obj(rows)},"queries_sec":${obj(o.best.map { case (k, v) => id(k) -> f2(v) })}}"""
+  }
+
+  /** The run's three stdout lines. The bench harness captures only a
+    * bounded tail of stdout, so the `{"metric":"total"}` line comes last,
+    * stays small (no field grows with the key count) and is the only line
+    * starting with `{"metric"`. The `warm_failures` line sits just before
+    * it: a harness run's stderr is unobservable after the fact. */
+  def stdoutLines(rec: RunRecord, sf: String, heapMb: Long): Seq[String] = {
+    val o = rec.outcome
+    val ok = o.best.filter(_._2 >= 0)
+    val fams = o.best.groupBy(_._1.take(1)).toSeq.sortBy(_._1)
+      .map { case (fam, qs) => fam -> f3(qs.map(_._2).filter(_ >= 0).sum) }
+    val t = rec.timed.values.toSeq
+    def mb(v: Long): Long = v >> 20
+    val peak = if (t.isEmpty) 0L else mb(t.map(_.peakB).max)
+    Seq(
+      perQueryLine(o.best),
+      s"""{"warm_failures":${warmFailuresJson(rec)}}""",
+      s"""{"metric":"total","value":${f3(ok.map(_._2).sum)},"unit":"sec","n":${o.best.size},""" +
+        s""""failed":${o.best.size - ok.size},"runs":${o.runs},"warm_sec":${f3(rec.warm.sec)},""" +
+        s""""pass_sums":${list(o.passSums.map(f3))},"pass_ends":${list(o.passEnds.map(f3))},""" +
+        s""""retimes":${o.retimed.size},"heap_mb":$heapMb,"shuf_r_mb":${mb(t.map(_.readB).sum)},""" +
+        s""""shuf_w_mb":${mb(t.map(_.writeB).sum)},"spill_mb":${mb(t.map(_.spillB).sum)},""" +
+        s""""peak_mb":$peak,"families":${obj(fams)},"sf":${str(sf)}}""")
   }
 
   /** Execute `name`'s whole plan at `sfDir` into the noop sink: the plan
@@ -224,149 +285,43 @@ object Bench {
     // query (sequential execution ⇒ exact windows) and keep the metrics of
     // the run that set the query's best time — the same run the reported
     // seconds come from. The listener is registered BEFORE the untimed
-    // pass ([[warm]]) so that pass is measured too: its seconds + shuffle
-    // bytes ship as the "__warm__" pseudo-key in the committed ledger (r17
-    // VERDICT #2 — growth of the untimed region must be a diffable signal;
-    // the per-query rows bill each query's steady-state plan, this row
-    // bills every first execution). Its failed keys are surfaced in stdout
-    // JSON below: a driver run's stderr is unobservable after the fact,
-    // and a silent warm gap reads exactly like a plan regression in the
-    // byte ledger (the r16→r17 c02 mis-diagnosis).
+    // pass ([[warm]]) so that pass is measured too: its bytes are the
+    // "__warm__" ledger row and its seconds `warm_sec`, so moving work into
+    // the untimed region is itself a flagged byte regression (r17 VERDICT #2).
     val acc = new TaskMetricsAcc
     spark.sparkContext.addSparkListener(acc)
     acc.mark()
     val warmT0 = System.nanoTime()
     val warmFailures = warm(spark, names, sfDir)
-    val warmSec = (System.nanoTime() - warmT0) / 1e9
-    val warmMetrics = { val (r, w, sp, pk) = acc.delta(); QueryMetrics(r, w, sp, pk) }
-    val qMetrics = scala.collection.mutable.HashMap[String, QueryMetrics]()
-    val bestSeen = scala.collection.mutable.HashMap[String, Double]()
+    val warmRun = acc.delta((System.nanoTime() - warmT0) / 1e9)
+    val timed = scala.collection.mutable.HashMap[String, RunMetrics]()
     def runOne(name: String): Double = {
       acc.mark()
       val t0 = System.nanoTime()
       try {
         sink(spark, name, sfDir)
         val t = (System.nanoTime() - t0) / 1e9
-        if (t < bestSeen.getOrElse(name, Double.MaxValue)) {
-          bestSeen(name) = t
-          val (r, w, sp, pk) = acc.delta()
-          qMetrics(name) = QueryMetrics(r, w, sp, pk)
-        }
+        if (timed.get(name).forall(t < _.sec)) timed(name) = acc.delta(t)
         t
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
       }
     }
-    val out = adaptiveMin(names, runOne,
-      () => elapsedSec, budgetSec.toDouble)
-    val results = out.best
-    def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // Output layout (the harness captures only a bounded TAIL of stdout, so
-    // the machine-readable summary must be the LAST and SHORTEST line):
-    //   1. one {"family":...} detail line per query family, full query
-    //      names, 3-decimal secs — human/archival record; may be truncated
-    //      away by the tail capture, that's fine;
-    //   2. one {"retimed":...} detail line listing the outlier re-runs;
-    //   2b. per-query shuffle/spill metrics appended to
-    //       docs/bench/metrics_history.jsonl + one per-family shuffle
-    //       summary line (see the comment at the write below);
-    //   3. ONE bounded {"per_query_sec":...,"n":N} line ([[perQueryLine]]);
-    //   4. ONE final {"metric":"total",...} line, compact: per-family
-    //      subtotals, full-pass count + sums + wall timestamps, retime
-    //      count, and the heap — enough to run a thrash-vs-stall
-    //      post-mortem from the artifact alone.
-    // The final line is ~1.3 KB — well inside the capture window — and is
-    // the only line starting with {"metric", so a parser scanning for the
-    // summary cannot pick up a detail line instead.
-    def family(name: String): String = name.take(1)
-    results.groupBy { case (n, _) => family(n) }.toSeq.sortBy(_._1).foreach {
-      case (fam, qs) =>
-        val body = qs.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + f(v) }
-          .mkString("{", ",", "}")
-        println(s"""{"family":"$fam","queries":$body}""")
-    }
-    println(s"""{"retimed":${out.retimed.map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
-    // Per-query shuffle/spill record. The harness captures only the LAST
-    // ~2 KB of stdout — a 147-entry byte map cannot ride the tail — so the
-    // full map goes to an appended JSONL file (committed with the round, so
-    // cross-round shuffle drift is diffable from git history), a per-family
-    // archival detail line goes to stdout, and the final total line carries
-    // only the 4 whole-run totals. Shuffle volume is the host-independent
-    // drift signal wall time is not.
-    def mb(v: Long): Long = v >> 20
-    val kb = (v: Long) => v >> 10 // KB in the file: fine enough to catch drift on small queries
-    // "__warm__" pseudo-key first (kept out of qMetrics — the short-prefix
-    // mangling below is for query names): the untimed pass's bytes ride
-    // the same drift detector as every query row, so moving work into the
-    // untimed region is itself a flagged byte regression.
-    val mJson = (s""""__warm__":[${kb(warmMetrics.readB)},${kb(warmMetrics.writeB)},${kb(warmMetrics.spillB)},${kb(warmMetrics.peakB)}]""" +:
-      qMetrics.toSeq.sortBy(_._1).map { case (k, m) =>
-        "\"" + k.takeWhile(_ != '_') + s"""\":[${kb(m.readB)},${kb(m.writeB)},${kb(m.spillB)},${kb(m.peakB)}]"""
-      }).mkString("{", ",", "}")
-    // warm-gap observability: [] positively confirms a steady-state ledger;
-    // a non-empty list names exactly which keys' first executions may have
-    // landed in a timed run. Bounded (≤20 names), so it never grows with
-    // query count; both ledger lines carry the same list, so a failed key
-    // explains its own gap in the "__warm__" row.
-    val warmFailJson = warmFailures.take(20).map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Run identity (VERDICT r7 #3): stamp the round so bench_history.py
-    // keys runs by it instead of file position. The round comes only from
-    // SPARK_GRAFT_ROUND; without it the field is left out (a guessed round
-    // once stamped an 8-core scaling run as the next round). The app id
-    // ties re-appended lines from the same JVM together, and cpus tells
-    // runs of one round on different core counts apart.
+    val out = adaptiveMin(names, runOne, () => elapsedSec, budgetSec.toDouble)
+    val rec = RunRecord(out, timed.toMap, warmRun, warmFailures)
+    // The committed ledger is the only channel a full per-key map survives
+    // in: the harness captures a ~2 KB stdout tail. Shuffle bytes are the
+    // host-independent drift signal wall time is not.
     val round = sys.env.get("SPARK_GRAFT_ROUND").flatMap(r => scala.util.Try(r.toInt).toOption)
-      .fold("")(r => s""""round":$r,""")
-    val runId = s""""app":"${spark.sparkContext.applicationId}","sf":"$sfDir","cpus":$cpus"""
-    val histLine = s"""{$round$runId,"unit":"kb_read_write_spill_peak","warm_failures":$warmFailJson,"queries":$mJson}"""
-    // Companion SECONDS line (r17 VERDICT #2: the driver captures only a
-    // ~2 KB stdout tail, so a full per-query map can never ride it — the
-    // committed ledger is the only channel that survives; with this line
-    // the next round's PERF per-query table is reconstructible from git
-    // alone). Field is "queries_sec", NOT "queries": the drift parser
-    // sums v[0]+v[1] over "queries" entries and must keep skipping this
-    // line. Pass metadata (runs/pass sums/pass ends/retimes/cpus/budget)
-    // rides along so a stall post-mortem is possible per run, and the
-    // untimed pass's wall seconds complete the "__warm__" byte row above.
-    def fmt2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    val secJson = results.sortBy(_._1).map { case (k, v) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + fmt2(v) }.mkString("{", ",", "}")
-    val secLine = s"""{$round$runId,"unit":"sec","warm_sec":${fmt2(warmSec)},"runs":${out.runs},"pass_sums":${out.passSums.map(fmt2).mkString("[", ",", "]")},"pass_ends":${out.passEnds.map(fmt2).mkString("[", ",", "]")},"retimes":${out.retimed.size},"warm_failures":$warmFailJson,"queries_sec":$secJson}"""
     try {
       val dir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_METRICS_DIR", "docs/bench"))
       dir.mkdirs()
       val w = new java.io.FileWriter(new java.io.File(dir, "metrics_history.jsonl"), true)
-      try w.write(histLine + "\n" + secLine + "\n") finally w.close()
+      try w.write(ledgerLine(rec, round, spark.sparkContext.applicationId, sfDir, cpus) + "\n")
+      finally w.close()
     } catch { case e: Throwable => System.err.println(s"[bench] metrics file skipped: $e") }
-    qMetrics.toSeq.groupBy { case (n, _) => family(n) }.toSeq.sortBy(_._1)
-      .foreach { case (fam, qs) =>
-        println(s"""{"family":"$fam","shuffle_read_mb":${mb(qs.map(_._2.readB).sum)},"shuffle_write_mb":${mb(qs.map(_._2.writeB).sum)},"spill_mb":${mb(qs.map(_._2.spillB).sum)},"peak_task_mb":${mb(qs.map(_._2.peakB).max)}}""")
-      }
-    // Per-query seconds get their OWN line: at 210 queries embedding the
-    // map in the total line pushed the head fields (metric/value/n/failed)
-    // past the harness's bounded stdout-tail capture and r8's bench went
-    // unparsed. The line is capped at ~1 KB and leads with failures and the
-    // costliest keys, so whatever the tail keeps is the part that matters;
-    // tools/bench_history.py regex-scans the whole tail.
-    println(perQueryLine(results))
-    val fams = results.groupBy { case (n, _) => family(n) }.toSeq.sortBy(_._1)
-      .map { case (fam, qs) => "\"" + fam + "\":" + f(qs.map(_._2).filter(_ >= 0).sum) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val failed = results.count(_._2 < 0)
-    val sums = out.passSums.map(f).mkString("[", ",", "]")
-    val ends = out.passEnds.map(f).mkString("[", ",", "]")
-    val heapMb = Runtime.getRuntime.maxMemory() / (1L << 20)
-    val shufR = mb(qMetrics.valuesIterator.map(_.readB).sum)
-    val shufW = mb(qMetrics.valuesIterator.map(_.writeB).sum)
-    val spillT = mb(qMetrics.valuesIterator.map(_.spillB).sum)
-    val peakT = if (qMetrics.isEmpty) 0L else mb(qMetrics.valuesIterator.map(_.peakB).max)
-    // emitted immediately BEFORE the total line so it lands inside the
-    // harness's bounded stdout-tail capture (a driver run's stderr is
-    // unobservable after the fact)
-    println(s"""{"warm_failures":$warmFailJson}""")
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n":${results.size},"failed":$failed,"runs":${out.runs},"pass_sums":$sums,"pass_ends":$ends,"retimes":${out.retimed.size},"heap_mb":$heapMb,"shuf_r_mb":$shufR,"shuf_w_mb":$shufW,"spill_mb":$spillT,"peak_mb":$peakT,"families":$fams,"sf":"$sfDir"}""")
+    stdoutLines(rec, sfDir, Runtime.getRuntime.maxMemory() / (1L << 20)).foreach(println)
     spark.stop()
   }
 }

@@ -294,8 +294,8 @@ private[graft] object EntryC2 {
 
     "c90_bpe_compression" -> ((s, d) => {
       // what the learned merges BUY: corpus symbol count before vs after
-      // applying c88's three rules (Bpe.applyMerges — same pipeline that
-      // learned them), with the saving in integer milli units. The
+      // applying c88's three rules (the corpus half of Bpe.mergesAndApply —
+      // same pipeline that learned them), with the saving in integer milli units. The
       // tokenizer-training feedback metric: merge yield flattening ⇒
       // stop learning rules.
       val docs = t(s, d, "documents")
@@ -516,7 +516,7 @@ private[graft] object EntryC2 {
     "c76_top_similar_pairs" -> ((s, d) =>
       // threshold-free "worst near-dups" ranking: top-20 pairs by exact
       // integer milli-jaccard over the memoized shingle index
-      // (Dedup.topSimilarPairs scaladoc: co-count kernel + TakeOrdered
+      // (Dedup.topSimilarPairsOf scaladoc: co-count kernel + TakeOrdered
       // per-task heaps, no full sort)
       // r17: reads the memoized docCoCounts frame (shared with c49/c52)
       Dedup.topSimilarPairsOf(docCoCounts(s, d), k = 20)
@@ -753,7 +753,7 @@ private[graft] object EntryC2 {
       // sketch-quality-as-columns (the b18/c42 pattern for minhash):
       // per exact near-dup pair, exact |∩|/|∪| NEXT TO the 64-perm
       // signature agreement — the estimator and its ground truth in one
-      // hash-checked row. See Dedup.jaccardCalibration. r17: reads the
+      // hash-checked row. See Dedup.jaccardCalibrationOf. r17: reads the
       // memoized docCoCounts frame (shared with c49/c76); the shingle
       // index is still passed for the signature columns.
       Dedup.jaccardCalibrationOf(docCoCounts(s, d), docShingleSets(s, d),

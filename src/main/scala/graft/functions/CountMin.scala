@@ -123,14 +123,8 @@ object CountMin {
     * plus the 128-bit md5 of the canonicalized plan ([[graft.sources.Memo.planKey]]
     * — not the 32-bit semanticHash, whose collisions would silently serve
     * the wrong sketch). The key identifies the plan, not the data: the
-    * memo assumes scanned inputs are immutable for the app's life; if a
-    * table's files are rewritten in place, call [[invalidateSketchCache]]
-    * first. */
+    * memo assumes scanned inputs are immutable for the app's life. */
   private val sketchMemo = new graft.sources.Memo[DataFrame](maxEntries = 8)(_.unpersist())
-
-  /** Explicit invalidation hook for [[joinOrderAdvisor]]'s sketch memo —
-    * required after an in-place rewrite of a previously-advised table. */
-  def invalidateSketchCache(): Unit = sketchMemo.clear()
 
   def joinOrderAdvisor(tables: Seq[(String, DataFrame)], tokCol: String,
                        d: Int = 4, width: Int = 64): DataFrame = {

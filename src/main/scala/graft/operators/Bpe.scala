@@ -50,20 +50,12 @@ object Bpe {
              roundPartitions: Option[Int] = None): DataFrame =
     run(docs, idCol, textCol, k, roundPartitions)._1
 
-  /** The corpus AFTER the first `k` merges: (doc, pos, tok) symbol rows —
-    * what the learned rules buy, measurable as sequence-length
-    * compression (c90). Same computation as [[merges]]; the rules and
-    * their application come from one pipeline. */
-  def applyMerges(docs: DataFrame, idCol: String, textCol: String, k: Int,
-                  roundPartitions: Option[Int] = None): DataFrame =
-    run(docs, idCol, textCol, k, roundPartitions)._2
-
-  /** Both halves of one `k`-round chain: ([[merges]], [[applyMerges]])
-    * backed by the SAME per-round checkpoints. A caller needing the rules
-    * AND the compacted corpus (the c88/c90 pair) previously paid the k
-    * rounds twice — once per entry point — because each call builds its
-    * own chain (r17 optimization round, guide §2.4: don't compute the
-    * same iteration twice). */
+  /** Both halves of one `k`-round chain, backed by the SAME per-round
+    * checkpoints: the [[merges]] rules, and the corpus AFTER the first `k`
+    * merges as (doc, pos, tok) symbol rows — what the learned rules buy,
+    * measurable as sequence-length compression (c90). The c88/c90 pair
+    * reads both from one chain, so the k rounds run once (guide §2.4:
+    * don't compute the same iteration twice). */
   def mergesAndApply(docs: DataFrame, idCol: String, textCol: String, k: Int,
                      roundPartitions: Option[Int] = None): (DataFrame, DataFrame) =
     run(docs, idCol, textCol, k, roundPartitions)
@@ -74,7 +66,7 @@ object Bpe {
     * visible in the composed physical plan. Production chains always
     * truncate — without the checkpoints plan size doubles per round —
     * so the load-bearing plan properties can only be asserted on this
-    * probe (PlanSpec), never on [[merges]]/[[applyMerges]] output, which
+    * probe (PlanSpec), never on [[merges]]/[[mergesAndApply]] output, which
     * is checkpoint scans by design. Never call with large k: plan size
     * is exponential in k without truncation. */
   private[graft] def planProbe(docs: DataFrame, idCol: String, textCol: String,

@@ -45,6 +45,15 @@ object Dedup {
       array_min(transform(hashes, h => pmod(a * pmod(h, lit(P)) + b, lit(P))))
     })
 
+  /** The `bands` LSH band keys of a minhash signature column: band b is
+    * the signature's r = numPerm/bands values from position b·r + 1, as
+    * strings joined with "_". The oracles rebuild this exact string. */
+  private def bandSigs(sig: Column, bands: Int, numPerm: Int): Column = {
+    val r = numPerm / bands
+    array((0 until bands).map(b =>
+      array_join(transform(slice(sig, b * r + 1, r), _.cast("string")), "_")): _*)
+  }
+
   /** The shared shingle-set index: one row per doc with its distinct
     * 60-bit shingle hashes — the common input of [[minhashPairsOf]] and
     * [[ngramJaccardPairsOf]]. Persist (and reuse) it when running several
@@ -113,11 +122,8 @@ object Dedup {
   def minhashPairsOf(sets: DataFrame, numPerm: Int = 64, bands: Int = 16,
                      threshold: Double = 0.8, maxBucket: Int = 1000): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
-    val r = numPerm / bands
     val sigs = sets.withColumn("sig", minhashSignature(col("hs"), numPerm))
-    val banded = sigs.select(col("id"), posexplode(
-        array((0 until bands).map(b =>
-          array_join(transform(slice(col("sig"), b * r + 1, r), _.cast("string")), "_")): _*)))
+    val banded = sigs.select(col("id"), posexplode(bandSigs(col("sig"), bands, numPerm)))
       .toDF("id", "band", "bandsig")
     val wb = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bandsig"))
@@ -170,12 +176,9 @@ object Dedup {
                               threshold: Double = 0.8,
                               maxBucket: Int = 1000): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
-    val r = numPerm / bands
     def banded(df: DataFrame): DataFrame =
       df.withColumn("sig", minhashSignature(col("hs"), numPerm))
-        .select(col("id"), col("hs"), posexplode(
-          array((0 until bands).map(b =>
-            array_join(transform(slice(col("sig"), b * r + 1, r), _.cast("string")), "_")): _*)))
+        .select(col("id"), col("hs"), posexplode(bandSigs(col("sig"), bands, numPerm)))
         .toDF("id", "hs", "pos", "bandsig")
         .select(col("id"), col("hs"), col("pos").as("band"), col("bandsig"))
     // degenerate-tower cap, same rationale as minhashPairsOf's maxBucket: a
@@ -253,11 +256,8 @@ object Dedup {
                               maxBucket: Int = 1000): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
     require(minAgree >= 1 && minAgree <= numPerm, s"minAgree out of range: $minAgree")
-    val r = numPerm / bands
     val banded = sets.withColumn("sig", minhashSignature(col("hs"), numPerm))
-      .select(col("id"), col("sig"), posexplode(
-        array((0 until bands).map(b =>
-          array_join(transform(slice(col("sig"), b * r + 1, r), _.cast("string")), "_")): _*)))
+      .select(col("id"), col("sig"), posexplode(bandSigs(col("sig"), bands, numPerm)))
       .toDF("id", "sig", "band", "bandsig")
     val hot = banded.groupBy(col("band"), col("bandsig"))
       .agg(count(lit(1)).as("n")).where(col("n") > maxBucket)
@@ -285,14 +285,10 @@ object Dedup {
     * Scale: the pair discovery is [[ngramJaccardPairsOf]]'s capped
     * inverted-index join; signatures join on doc id (near-dup-pair-sized
     * relation, two hash joins). Nothing new shuffles beyond the pair graph.
-    */
-  def jaccardCalibration(sets: DataFrame, threshold: Double = 0.8,
-                         numPerm: Int = 64, maxPosting: Int = 10000): DataFrame =
-    jaccardCalibrationOf(cappedCoCounts(sets, maxPosting), sets, threshold, numPerm)
-
-  /** [[jaccardCalibration]] over a precomputed [[cappedCoCounts]] frame
-    * (r17 sharing variant — see [[containmentPairsOf]]); `sets` is still
-    * needed for the minhash signatures of the surviving pairs.
+    *
+    * Reads a precomputed [[cappedCoCounts]] frame (r17 sharing variant —
+    * see [[containmentPairsOf]]); `sets` is still needed for the minhash
+    * signatures of the surviving pairs.
     *
     * INVARIANT (r17 ADVICE): `co` MUST be [[cappedCoCounts]] of this
     * very `sets` frame (same rows, same `maxPosting`) — the
@@ -373,9 +369,7 @@ object Dedup {
     val nDocs = broadcast(sigs.agg(count(lit(1)).as("n_docs")))
     val perConfig = candBands.map { b =>
       val r = numPerm / b
-      val banded = sigs.select(col("id"), posexplode(
-          array((0 until b).map(i =>
-            array_join(transform(slice(col("sig"), i * r + 1, r), _.cast("string")), "_")): _*)))
+      val banded = sigs.select(col("id"), posexplode(bandSigs(col("sig"), b, numPerm)))
         .toDF("id", "band", "bandsig")
       banded.groupBy(col("band"), col("bandsig"))
         .agg(count(lit(1)).as("n"))
@@ -418,8 +412,8 @@ object Dedup {
     * exact jaccard over the sub-universe of non-hot shingles — numerator
     * and denominator stay consistent (capping only the intersection would
     * silently drop near-threshold pairs). When no shingle's document
-    * frequency exceeds `maxPosting` (checkable via [[cappedShingleCount]])
-    * the result is the exact jaccard, full stop.
+    * frequency exceeds `maxPosting` the result is the exact jaccard, full
+    * stop.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3, threshold: Double = 0.8,
@@ -431,7 +425,7 @@ object Dedup {
 
   /** The capped inverted-index co-count core shared by every exact
     * set-overlap operator ([[ngramJaccardPairsOf]], [[containmentPairs]],
-    * [[jaccardCalibration]]): all pairs sharing ≥ 1 non-hot shingle, with
+    * [[jaccardCalibrationOf]]): all pairs sharing ≥ 1 non-hot shingle, with
     * |intersection| and both (cap-consistent) set sizes.
     *
     * The posting list re-explodes from the (persisted) `sets` index on
@@ -485,29 +479,14 @@ object Dedup {
     * index — only pairs sharing ≥1 shingle are ever materialized, which
     * is also exactly the set with jaccard > 0), then a global top-k —
     * Spark plans TakeOrdered (per-task k-row heaps, no full sort,
-    * nothing single-partition until k rows). */
-  def topSimilarPairs(sets: DataFrame, k: Int = 20,
-                      maxPosting: Int = 10000): DataFrame =
-    topSimilarPairsOf(cappedCoCounts(sets, maxPosting), k)
-
-  /** [[topSimilarPairs]] over a precomputed [[cappedCoCounts]] frame
-    * (r17 sharing variant — see [[containmentPairsOf]]). */
+    * nothing single-partition until k rows). Reads a precomputed
+    * [[cappedCoCounts]] frame (r17 sharing variant — see
+    * [[containmentPairsOf]]). */
   private[graft] def topSimilarPairsOf(co: DataFrame, k: Int = 20): DataFrame =
     co.select(col("a"), col("b"),
         expr("(1000 * inter) div (sza + szb - inter)").as("milli_jaccard"))
       .orderBy(col("milli_jaccard").desc, col("a"), col("b"))
       .limit(k)
-
-  /** Number of shingles whose document frequency exceeds `maxPosting` —
-    * when 0, [[ngramJaccardPairs]] is exact over the full shingle universe.
-    * An action; run it as a data-quality check, not in the query path. */
-  def cappedShingleCount(df: DataFrame, idCol: String, textCol: String,
-                         shingleN: Int = 3, maxPosting: Int = 10000): Long =
-    df.select(col(idCol).as("id"),
-        explode(array_distinct(Text.shingleHashes(col(textCol), shingleN))).as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .where(col("df") > maxPosting)
-      .count()
 
   /** Prefix-filtered exact jaccard join (the PPJoin family: Chaudhuri et
     * al. SSJoin 2006, Xiao et al. PPJoin 2008; behavioral kin of oamap's

@@ -889,12 +889,8 @@ object Pipeline {
     * expression ([[graft.sources.Memo.planKey]] — not the 32-bit
     * semanticHash, whose collisions would silently serve the wrong member
     * set). Plan-keyed ⇒ assumes the key table is immutable for the app's
-    * life; after an in-place rewrite call [[invalidateMemberHashCache]]. */
+    * life. */
   private val memberHashMemo = new graft.sources.Memo[DataFrame](maxEntries = 4)(_.unpersist())
-
-  /** Explicit invalidation hook for [[bloomAdvisor]]'s member-hash memo —
-    * required after an in-place rewrite of a previously-advised key table. */
-  def invalidateMemberHashCache(): Unit = memberHashMemo.clear()
 
   def bloomAdvisor(keys: DataFrame, keyHash: Column,
                    candMBits: Seq[Int] = Seq(1 << 14, 1 << 16, 1 << 18),

@@ -71,17 +71,14 @@ object Formats {
   def readJsonLines(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(dir)
 
-  /** Base directory for roundtrip sinks. Injectable via SPARK_GRAFT_SCRATCH
-    * (env) or `graft.scratch.root` (sys prop); defaults to the local JVM
-    * tmpdir, which is correct for local[*] only. ON A REAL CLUSTER this MUST
-    * point at a filesystem shared by all executors (HDFS/S3/NFS URI) —
-    * executor-local /tmp is per-node, so a read-back after a distributed
-    * write would see only the driver's shard.
+  /** Base directory for roundtrip sinks: `SPARK_GRAFT_SCRATCH`, else the
+    * local JVM tmpdir, which is correct for local[*] only. ON A REAL
+    * CLUSTER this MUST point at a filesystem shared by all executors
+    * (HDFS/S3/NFS URI) — executor-local /tmp is per-node, so a read-back
+    * after a distributed write would see only the driver's shard.
     */
   def sinkRoot: String =
-    sys.env.get("SPARK_GRAFT_SCRATCH")
-      .orElse(sys.props.get("graft.scratch.root"))
-      .getOrElse(sys.props("java.io.tmpdir"))
+    sys.env.getOrElse("SPARK_GRAFT_SCRATCH", sys.props("java.io.tmpdir"))
 
   /** Human-debuggable, collision-free tag for an input dir: its sanitized
     * basename PLUS a short hash of the full canonical path — basename alone

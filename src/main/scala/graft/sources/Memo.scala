@@ -12,6 +12,11 @@ import org.apache.spark.storage.StorageLevel
   * and `release`s the evicted value (unpersisting its frames) so its
   * storage is released. Sized for the realistic working set (a handful of
   * (session, scale-factor) combinations), not as a general cache.
+  *
+  * Entries live as long as the session: the memo assumes the data behind
+  * a key is immutable for the app's life (the at-rest-layout write-once
+  * convention). A key cannot see files rewritten in place under the same
+  * path, so such a rewrite needs a new session.
   */
 private[graft] final class Memo[V](maxEntries: Int = 8)(release: V => Unit) {
   private type K = (SparkSession, String)
@@ -31,15 +36,6 @@ private[graft] final class Memo[V](maxEntries: Int = 8)(release: V => Unit) {
       m.put(k, nv)
       nv
     }
-  }
-
-  /** Explicit invalidation hook: release and drop every cached entry.
-    * Callers whose underlying data changed in-place (same path, rewritten
-    * files — the one case a plan-derived key cannot see) must call this
-    * before reusing a memoized builder. */
-  def clear(): Unit = m.synchronized {
-    m.values.forEach(quietly(_))
-    m.clear()
   }
 }
 
@@ -86,8 +82,8 @@ private[graft] object Memo {
     * from the plan — the table identity toString drops; the md5 of that
     * is 128-bit. The key still identifies the PLAN, not the data:
     * memoized entries assume the scanned input is immutable for the
-    * app's life (the at-rest-layout write-once convention); in-place
-    * rewrites require [[Memo#clear]]. */
+    * app's life (the at-rest-layout write-once convention); a file
+    * rewritten in place under the same path is served stale. */
   def planKey(df: DataFrame): String = {
     val analyzed = df.queryExecution.analyzed
     val paths = analyzed.collect {

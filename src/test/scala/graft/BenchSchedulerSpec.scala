@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * stall-contaminated pass 1 consumed the wall budget, the all-or-nothing
   * pass 2 was skipped, and the contaminated numbers shipped as the official
   * record. The fix must recover the true times via outlier re-runs that fit
-  * the remaining budget. The mains' key selection and Bench's bounded
-  * per-query line are pure too and are checked here without Spark. */
+  * the remaining budget. The mains' key selection and Bench's stdout and
+  * ledger lines are pure too and are checked here without Spark. */
 class BenchSchedulerSpec extends AnyFunSuite {
 
   /** Simulated host: `run` returns the scripted duration for the i-th
@@ -120,5 +120,45 @@ class BenchSchedulerSpec extends AnyFunSuite {
     assert(line.startsWith("""{"per_query_sec":{"b02":-1.00,"c300":3.00,"c299":2.99,"""))
     assert(line.endsWith("""},"n":301}"""))
     assert(Bench.perQueryLine(Seq("a01_q" -> 0.5)) == """{"per_query_sec":{"a01":0.50},"n":1}""")
+  }
+
+  private val rec = Bench.RunRecord(
+    Bench.Outcome(Seq("a01_q" -> 0.5, "b02_q" -> -1.0, "c03_q" -> 2.25), runs = 2,
+      passSums = Seq(3.0, 2.5), passEnds = Seq(10.0, 13.0), retimed = Seq("c03_q")),
+    timed = Map("c03_q" -> Bench.RunMetrics(2.25, 3L << 10, 2L << 10, 0L, 5L << 20),
+      "a01_q" -> Bench.RunMetrics(0.5, 0L, 0L, 0L, 1L << 10)),
+    warm = Bench.RunMetrics(7.5, 100L << 10, 50L << 10, 0L, 1L << 20),
+    warmFailures = Seq("b02_q"))
+
+  private def json(line: String) = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+
+  test("ledger line: KB rows with __warm__ first, seconds and the run's metadata on one line") {
+    val line = Bench.ledgerLine(rec, None, "local-1", "/sf", 4)
+    assert(line == """{"app":"local-1","sf":"/sf","cpus":4,"warm_sec":7.50,"runs":2,""" +
+      """"pass_sums":[3.00,2.50],"pass_ends":[10.00,13.00],"retimed":["c03_q"],""" +
+      """"warm_failures":["b02_q"],"units":{"queries":"kb_read_write_spill_peak","queries_sec":"sec"},""" +
+      """"queries":{"__warm__":[100,50,0,1024],"a01":[0,0,0,1],"c03":[3,2,0,5120]},""" +
+      """"queries_sec":{"a01":0.50,"b02":-1.00,"c03":2.25}}""")
+    assert(!json(line).has("round"))
+    val stamped = Bench.ledgerLine(rec, Some(19), "local-1", "/sf", 4)
+    assert(stamped == line.replace("""{"app"""", """{"round":19,"app""""))
+    assert(json(stamped).get("round").asInt == 19)
+  }
+
+  test("stdout: per-query, warm-failures and total lines, the total last, small and carrying warm_sec") {
+    val Seq(perQuery, warmFailures, total) = Bench.stdoutLines(rec, "/sf", 20480)
+    assert(perQuery == Bench.perQueryLine(rec.outcome.best))
+    assert(warmFailures == """{"warm_failures":["b02_q"]}""")
+    assert(total == """{"metric":"total","value":2.750,"unit":"sec","n":3,"failed":1,"runs":2,""" +
+      """"warm_sec":7.500,"pass_sums":[3.000,2.500],"pass_ends":[10.000,13.000],"retimes":1,""" +
+      """"heap_mb":20480,"shuf_r_mb":0,"shuf_w_mb":0,"spill_mb":0,"peak_mb":5,""" +
+      """"families":{"a":0.500,"b":0.000,"c":2.250},"sf":"/sf"}""")
+    // at the full key count with every key failing its warm-up
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val big = rec.copy(outcome = rec.outcome.copy(best = names.map(_ -> 1234.5)),
+      warmFailures = names)
+    val lines = Bench.stdoutLines(big, "/data/graft/testdata/sf0.1", 20480)
+    lines.foreach(l => json(l))
+    assert(lines.last.length < 1536)
   }
 }

@@ -61,7 +61,7 @@ class EquivalenceSpec extends SparkSpec {
     // exercises the round pipeline's windows (lead/lag, gaps-and-islands
     // pmod parity) and the max(struct) winner tiebreak under both
     // execution modes. Both halves are compared (r17 ADVICE: the
-    // applyMerges/corpus leg — c90's path — needs DIRECT codegen-on/off
+    // corpus leg — c90's path — needs DIRECT codegen-on/off
     // coverage, not just transitively via the merges that feed it), and
     // the suite's prior wholeStage value is restored rather than a
     // hardcoded "true" (r17 ADVICE).

@@ -981,7 +981,7 @@ class PlanSpec extends SparkSpec {
 
   test("bpe round algebra: per-doc window shuffle, 1-row winner broadcasts, no pair join") {
     // the production chain checkpoints every round, so the round subtree
-    // is invisible in merges/applyMerges plans — the load-bearing plan
+    // is invisible in merges/corpus plans — the load-bearing plan
     // properties are pinned on the truncation-free probe instead (k=2:
     // big enough to compose two rounds, small enough that the
     // untruncated plan stays printable)
@@ -1392,9 +1392,49 @@ class PlanSpec extends SparkSpec {
     // layout) write their scratch output at most ONCE per application
     // (ensureWritten/_SUCCESS, catalog tableExists) — the write IS the
     // surface under test, and repeat builds here are action-free.
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.queryExecution.logical != null, name)
-    }
+    analyzedPlans.foreach { case (name, plan) => assert(plan != null, name) }
+  }
+
+  /** Every declared key built at sf0.001, with its analyzed plan: the
+    * subtrees of the shared frames it reads are part of it. */
+  private lazy val analyzedPlans = SparkEntry.queries.toSeq.sortBy(_._1).map {
+    case (name, fn) => name -> fn(spark, sf).queryExecution.analyzed
+  }
+
+  /** Keys whose plans hold partition-less windows, with how many. Such a
+    * window runs in one task whatever the input size, so a key that gains
+    * one fails the sweep below until the new window is reviewed and
+    * listed here. Each listed window's input is an aggregate or a top-k
+    * (buckets, deciles, strata, advisor candidates); the
+    * `Scale.keySkewProfile` row_number of b81 and c83 still runs over one
+    * row per distinct key and is the known straggler. A window in a
+    * subtree a plan reads twice counts twice. */
+  private val auditedGlobalWindows = Map(
+    "b71_equidepth_hist" -> 2, "b77_period_over_period" -> 1, "b81_skew_profile" -> 1,
+    "b84_weighted_pctile" -> 2, "b127_stream_calibration_monitor" -> 5,
+    "b128_funnel_ab_rev_contrast" -> 1, "c24_pack_shards" -> 1, "c33_target_mix" -> 1,
+    "c57_hybrid_rrf" -> 3, "c60_pq_adc_rerank" -> 1, "c65_sorted_neighborhood" -> 2,
+    "c83_plan_advisor" -> 1, "c84_contiguous_ids" -> 1, "c94_lsh_advisor" -> 1,
+    "c96_bloom_advisor" -> 1, "c100_join_order" -> 1, "c101_temperature_mix" -> 1,
+    "c105_ivf_probe_advisor" -> 1, "c106_epoch_allocation" -> 10,
+    "c113_eval_apportionment" -> 3, "c114_classifier_calibration" -> 2,
+    "c116_calibration_audit" -> 4, "c117_calibration_drift" -> 5)
+
+  test("partition-less windows only from the audited list; no (currentRow, unboundedFollowing) row frame") {
+    import org.apache.spark.sql.catalyst.expressions.{CurrentRow, RowFrame,
+      SpecifiedWindowFrame, UnboundedFollowing}
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    val nodes = analyzedPlans.map { case (name, plan) =>
+      name -> plan.collectWithSubqueries { case p => p } }
+    val global = nodes.map { case (name, ns) =>
+      name -> ns.count { case w: Window => w.partitionSpec.isEmpty; case _ => false } }
+      .filter(_._2 > 0).toMap
+    assert(global == auditedGlobalWindows,
+      s"partition-less windows changed; now ${global.toSeq.sorted.mkString(", ")}")
+    // Spark re-scans such a frame once per row: quadratic in a partition's size
+    val quadratic = nodes.collect { case (name, ns)
+      if ns.exists(_.expressions.exists(_.exists(
+        _ == SpecifiedWindowFrame(RowFrame, CurrentRow, UnboundedFollowing)))) => name }
+    assert(quadratic.isEmpty, s"(currentRow, unboundedFollowing) row frames in $quadratic")
   }
 }

@@ -86,8 +86,9 @@ def shuffle_drift_section():
         rnd = e["round"]
         for q, v in e.get("queries", {}).items():
             # byte rows are [read, write, spill, peak] lists; ignore any
-            # other shape (the r18 "unit":"sec" companion lines keep their
-            # map under "queries_sec", but stay defensive anyway)
+            # other shape (seconds live under "queries_sec", in the same
+            # line since one ledger line per run, and in the r18-era
+            # "unit":"sec" companion lines before it)
             if not isinstance(v, (list, tuple)) or len(v) < 2:
                 continue
             series.setdefault((e.get("sf", "?"), q), {}).setdefault(
