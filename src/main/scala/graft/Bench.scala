@@ -70,6 +70,13 @@ object Bench {
       passEnds: Seq[Double],
       retimed: Seq[String])
 
+  // adaptiveMin's schedule constants, named as its scaladoc reads them
+  private val margin = 1.3
+  private val slackSec = 30.0
+  private val outlierFloorSec = 2.0
+  private val medianFactor = 3.0
+  private val maxRetimeRounds = 2
+
   /** Adaptive min-of-runs scheduler — pure (runner + clock injected) so the
     * stall scenario is unit-testable without a stalling host.
     *
@@ -102,10 +109,7 @@ object Bench {
     * Failures are sticky: a query that failed in any run reports -1 and is
     * excluded from outlier selection and family medians. */
   def adaptiveMin(names: Seq[String], run: String => Double,
-                  elapsed: () => Double, budgetSec: Double,
-                  margin: Double = 1.3, slackSec: Double = 30.0,
-                  outlierFloorSec: Double = 2.0, medianFactor: Double = 3.0,
-                  maxRetimeRounds: Int = 2): Outcome = {
+                  elapsed: () => Double, budgetSec: Double): Outcome = {
     val order = names.sorted
     val best = scala.collection.mutable.HashMap[String, Double]()
     val failed = scala.collection.mutable.Set[String]()
@@ -114,10 +118,7 @@ object Bench {
     val retimed = scala.collection.mutable.ArrayBuffer[String]()
     def record(name: String, t: Double): Unit =
       if (t < 0) failed += name
-      else best.get(name) match {
-        case Some(p) => if (t < p) best(name) = t
-        case None => best(name) = t
-      }
+      else if (best.get(name).forall(t < _)) best(name) = t
     def fullPass(): Double = {
       var sum = 0.0
       order.foreach { n => val t = run(n); record(n, t); if (t >= 0) sum += t }
@@ -240,11 +241,11 @@ object Bench {
 
   /** The untimed pass: each of `names` once into the noop sink at `sfDir`.
     * A key's first execution pays what later ones skip: JIT and codegen,
-    * its shared frames' persists, the at-rest layouts it writes once and
-    * the plan-keyed caches it fills. Running the keys themselves warms
-    * exactly what the timed passes read, and only that. Each key runs in
-    * its own try, so one failure cannot skip the keys after it. Returns
-    * the keys that failed. */
+    * the persists of its `Shared` entries and the at-rest layouts it
+    * writes once. Running the keys themselves warms exactly what the
+    * timed passes read, and only that. Each key runs in its own try, so
+    * one failure cannot skip the keys after it. Returns the keys that
+    * failed. */
   def warm(spark: SparkSession, names: Seq[String], sfDir: String): Seq[String] =
     names.filter { n =>
       try { sink(spark, n, sfDir); false }

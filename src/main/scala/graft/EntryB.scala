@@ -1565,9 +1565,7 @@ private[graft] object EntryB {
         t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"),
           col("o_totalprice"), col("o_orderpriority")),
         partCol = "o_orderpriority", key = "o_custkey", buckets = 8)
-      val cb = graft.sources.Formats.bucketedTable(s, "customer_by_cust", d,
-        t(s, d, "customer").select(col("c_custkey"), col("c_mktsegment")),
-        "c_custkey", buckets = 8)
+      val cb = customerByCust(s, d)
       ob.where(col("o_orderpriority") === "1-URGENT")
         .hint("merge").join(cb, col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
@@ -1779,11 +1777,7 @@ private[graft] object EntryB {
       // directories go unread. Plan-asserted. At 100 TB this is how a
       // star-schema query skips partitions it can't name until the dim
       // filter runs — the complement of b38's static prune.
-      val dir = graft.sources.Formats.scratchDir(s, "orders_bypriority", d)
-      graft.sources.Formats.ensureWritten(s, dir) {
-        t(s, d, "orders").write.mode("overwrite")
-          .partitionBy("o_orderpriority").parquet(dir)
-      }
+      val dir = ordersByPriorityDir(s, d)
       // the dim must be an at-rest table with a REAL runtime filter: a
       // driver-literal relation gets constant-folded into a pre-filtered
       // LocalTableScan, leaving the DPP rule no selective predicate to
@@ -2395,12 +2389,8 @@ private[graft] object EntryB {
       // honest: auto-broadcast would hide the bucketing, and at real scale
       // neither fact side broadcasts. Exchange-freeness is plan-asserted
       // in PlanSpec.
-      val ob = graft.sources.Formats.bucketedTable(s, "orders_by_cust", d,
-        t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        "o_custkey", buckets = 8)
-      val cb = graft.sources.Formats.bucketedTable(s, "customer_by_cust", d,
-        t(s, d, "customer").select(col("c_custkey"), col("c_mktsegment")),
-        "c_custkey", buckets = 8)
+      val ob = ordersByCust(s, d)
+      val cb = customerByCust(s, d)
       ob.hint("merge").join(cb, col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue"))
@@ -2414,11 +2404,7 @@ private[graft] object EntryB {
       // the predicate-column half of the at-rest layout story (b37 buckets
       // by join key, b38 partitions by filter column). At 100 TB this is
       // the difference between scanning 20 TB and scanning 100 TB.
-      val dir = graft.sources.Formats.scratchDir(s, "orders_bypriority", d)
-      graft.sources.Formats.ensureWritten(s, dir) {
-        t(s, d, "orders").write.mode("overwrite")
-          .partitionBy("o_orderpriority").parquet(dir)
-      }
+      val dir = ordersByPriorityDir(s, d)
       s.read.parquet(dir)
         .where(col("o_orderpriority") === "1-URGENT")
         .groupBy(col("o_orderstatus"))

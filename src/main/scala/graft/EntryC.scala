@@ -574,9 +574,7 @@ private[graft] object EntryC {
       // exchange — the scan's bucket distribution already satisfies the
       // aggregate's requirement, so a 100 TB per-key rollup on a
       // bucketed-at-ingest table is shuffle-free (plan-asserted)
-      val ob = graft.sources.Formats.bucketedTable(s, "orders_by_cust", d,
-        t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        "o_custkey", buckets = 8)
+      val ob = ordersByCust(s, d)
       ob.groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total_price"))
         .orderBy(col("o_custkey"))
@@ -648,11 +646,7 @@ private[graft] object EntryC {
       // table, no raw join executed), and join_first = the smallest
       // estimated intermediate — the greedy first step of cost-based
       // join reordering, reproduced bit-for-bit by the oracle
-      graft.functions.CountMin.joinOrderAdvisor(Seq(
-          "events" -> t(s, d, "events").select(col("user_id").cast("string").as("tok")),
-          "orders" -> t(s, d, "orders").select(col("o_custkey").cast("string").as("tok")),
-          "customer" -> t(s, d, "customer").select(col("c_custkey").cast("string").as("tok"))),
-          "tok", d = 4, width = 64)
+      graft.functions.CountMin.joinOrderAdvisor(custKeySketches(s, d))
         .orderBy(col("left_table"), col("right_table"))),
 
     "c101_temperature_mix" -> ((s, d) =>

@@ -230,10 +230,7 @@ private[graft] object EntryC2 {
       // monotonicity across independently hashed filters is expected, not
       // theorem-backed; only the fp_ok BOUND is certifiable) — select the
       // theorem-backed column set for the gate.
-      graft.operators.Pipeline.bloomAdvisor(
-        t(s, d, "customer"),
-        graft.functions.Text.tokenHash(
-          concat(lit("m"), col("c_custkey").cast("string"))))
+      graft.operators.Pipeline.bloomAdvisor(customerMemberHashes(s, d))
         .select(col("m_bits"), col("k_hashes"), col("n_keys"), col("min_bits"),
           col("eligible"), col("chosen"), col("fp_ok"))
         .orderBy(col("m_bits"))),

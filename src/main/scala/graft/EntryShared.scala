@@ -41,6 +41,36 @@ private[graft] object EntryShared {
     dir
   }
 
+  /** orders partitioned by `o_orderpriority` at rest, read by b38
+    * (planning-time prune) and b79 (dynamic prune). ONE definition, like
+    * [[npyEmbeddingsDir]]: the two keys write one directory, so two
+    * copies of the write would let whichever key runs first in an app
+    * decide the layout the other reads. Returns the layout dir. */
+  private[graft] def ordersByPriorityDir(s: SparkSession, d: String): String = {
+    val dir = graft.sources.Formats.scratchDir(s, "orders_bypriority", d)
+    graft.sources.Formats.ensureWritten(s, dir) {
+      t(s, d, "orders").write.mode("overwrite")
+        .partitionBy("o_orderpriority").parquet(dir)
+    }
+    dir
+  }
+
+  /** orders bucketed on `o_custkey` (8 buckets), read by b37 (bucketed
+    * join) and b86 (bucketed aggregate): one definition for one table,
+    * as for [[ordersByPriorityDir]]. */
+  private[graft] def ordersByCust(s: SparkSession, d: String): DataFrame =
+    graft.sources.Formats.bucketedTable(s, "orders_by_cust", d,
+      t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
+      "o_custkey", buckets = 8)
+
+  /** customer bucketed on `c_custkey` (8 buckets), the join partner of
+    * b37 and b63: one definition for one table, as for
+    * [[ordersByPriorityDir]]. */
+  private[graft] def customerByCust(s: SparkSession, d: String): DataFrame =
+    graft.sources.Formats.bucketedTable(s, "customer_by_cust", d,
+      t(s, d, "customer").select(col("c_custkey"), col("c_mktsegment")),
+      "c_custkey", buckets = 8)
+
   /** The store's (vec_id, embedding)-renamed FULL-VECTOR read-back — ONE
     * definition next to [[npyEmbeddingsDir]] so the read-side column
     * contract can never drift between the store-served keys
@@ -396,6 +426,28 @@ private[graft] object EntryShared {
   private[graft] def bpeK3Merges(s: SparkSession, d: String): DataFrame = bpeK3(s, d)._1
 
   private[graft] def bpeK3Corpus(s: SparkSession, d: String): DataFrame = bpeK3(s, d)._2
+
+  /** c96's distinct member-hash set over customer, the input every
+    * candidate of [[graft.operators.Pipeline.bloomAdvisor]] reads. */
+  private[graft] val customerMemberHashes = SharedFrame { (s, d) =>
+    t(s, d, "customer")
+      .select(Text.tokenHash(concat(lit("m"), col("c_custkey").cast("string"))).as("h"))
+      .distinct()
+  }
+
+  /** c100's customer-key count-min sketches of events, orders and
+    * customer (d = 4, width = 64), each persisted `MEMORY_AND_DISK`. The
+    * three are ONE entry, as in [[bpeK3]], so an eviction drops them
+    * together. */
+  private[graft] val custKeySketches = new Shared[Seq[(String, DataFrame)]](_.map(_._2))((s, d) =>
+    Seq(
+      "events" -> t(s, d, "events").select(col("user_id").cast("string").as("tok")),
+      "orders" -> t(s, d, "orders").select(col("o_custkey").cast("string").as("tok")),
+      "customer" -> t(s, d, "customer").select(col("c_custkey").cast("string").as("tok"))
+    ).map { case (n, toks) =>
+      n -> graft.functions.CountMin.build(toks, "tok", d = 4, width = 64)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    })
 
   /** The 30-minute session_window frame over events, shared by b20 (the
     * sessionize readout) and b65 (the streaming-parity batch twin) —

@@ -103,13 +103,18 @@ object CountMin {
   }
 
   /** Multi-table join-order advisor — c83's measure-then-decide pattern
-    * at the next planning level: sketch each table's join-key column
-    * ONCE, estimate every pairwise join size as the sketch inner product
-    * (the [[joinSizeAudit]] estimator, one-sided ≥ truth), and flag the
-    * pair a greedy cost-based reorderer starts with: the smallest
-    * estimated intermediate. This is the decision a 100 TB planner makes
-    * from 2·d·width integers per table BEFORE committing a multi-way
-    * join order — no raw-row join is ever executed here.
+    * at the next planning level: given each table's join-key sketch
+    * ([[build]] with one (d, width) for all), estimate every pairwise
+    * join size as the sketch inner product (the [[joinSizeAudit]]
+    * estimator, one-sided ≥ truth), and flag the pair a greedy
+    * cost-based reorderer starts with: the smallest estimated
+    * intermediate. This is the decision a 100 TB planner makes from
+    * 2·d·width integers per table BEFORE committing a multi-way join
+    * order — no raw-row join is ever executed here.
+    *
+    * Each sketch is read by every pair it is in, so the caller persists
+    * them (the `…Of` convention of [[graft.operators.Dedup.minhashPairsOf]]:
+    * c100 reads one `Shared` entry holding all three).
     *
     * Determinism: cells use the engine-portable md5 bucket rule, inner
     * products and the argmin rank (est, then table names) are pure
@@ -117,28 +122,11 @@ object CountMin {
     * pass per table (map-side partials into the fixed d·width grid);
     * pairwise costs join ≤ d·width cells; the decision window runs over
     * the |pairs| frame. */
-  /** Bounded cache for the advisor's per-table sketch grids (≤ d·width rows
-    * each, but `persist` without release still pins blocks + session refs
-    * for the app's life — r9 VERDICT #4). Keyed by the caller's table NAME
-    * plus the 128-bit md5 of the canonicalized plan ([[graft.sources.Memo.planKey]]
-    * — not the 32-bit semanticHash, whose collisions would silently serve
-    * the wrong sketch). The key identifies the plan, not the data: the
-    * memo assumes scanned inputs are immutable for the app's life. */
-  private val sketchMemo = new graft.sources.Memo[DataFrame](maxEntries = 8)(_.unpersist())
-
-  def joinOrderAdvisor(tables: Seq[(String, DataFrame)], tokCol: String,
-                       d: Int = 4, width: Int = 64): DataFrame = {
-    require(tables.size >= 2, s"need at least two tables, got ${tables.size}")
-    val sketches = tables.map { case (n, df) =>
-      val key = s"joinSketch:$n:$tokCol:$d:$width:${graft.sources.Memo.planKey(df)}"
-      n -> sketchMemo.getOrElseUpdate((df.sparkSession, key)) {
-        build(df, tokCol, d, width)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-    }
+  def joinOrderAdvisor(sketches: Seq[(String, DataFrame)]): DataFrame = {
+    require(sketches.size >= 2, s"need at least two tables, got ${sketches.size}")
     val pairs = for {
-      i <- tables.indices
-      j <- tables.indices if i < j
+      i <- sketches.indices
+      j <- sketches.indices if i < j
     } yield {
       val (na, sa) = sketches(i)
       val (nb, sb) = sketches(j)

@@ -878,41 +878,21 @@ object Pipeline {
     * across independently hashed filters (r9 ADVICE), so callers read the
     * counts and oracles verify only the bound.
     *
-    * Scale: members hash-distinct once (persisted, shared by all
-    * candidates); each candidate is one bitmap aggregate (bitmaps cross
-    * the wire, never rows) + one narrow probe scan; the decision runs on
-    * a |candidates|-row frame. Nothing here grows with the corpus except
-    * the one distinct pass the sizing needs anyway. */
-  /** Bounded cache for [[bloomAdvisor]]'s distinct member-hash sets (see
-    * the persist note inside). Small bound: each entry is O(n_keys) rows.
-    * Keyed by the 128-bit md5 of the canonicalized key plan + hash
-    * expression ([[graft.sources.Memo.planKey]] — not the 32-bit
-    * semanticHash, whose collisions would silently serve the wrong member
-    * set). Plan-keyed ⇒ assumes the key table is immutable for the app's
-    * life. */
-  private val memberHashMemo = new graft.sources.Memo[DataFrame](maxEntries = 4)(_.unpersist())
-
-  def bloomAdvisor(keys: DataFrame, keyHash: Column,
+    * Scale: `hs` holds the distinct member hashes (column `h`, one row
+    * per member) and is read by every candidate, so the caller persists
+    * it (the `…Of` convention of [[graft.operators.Dedup.minhashPairsOf]]:
+    * c96 reads a `SharedFrame`). Each candidate is one bitmap aggregate
+    * (bitmaps cross the wire, never rows) + one narrow probe scan; the
+    * decision runs on a |candidates|-row frame. Nothing here grows with
+    * the corpus except the one distinct pass the sizing needs anyway. */
+  def bloomAdvisor(hs: DataFrame,
                    candMBits: Seq[Int] = Seq(1 << 14, 1 << 16, 1 << 18),
                    k: Int = 10, nProbes: Int = 1 << 16): DataFrame = {
     require(candMBits.nonEmpty && candMBits.forall(m => m > 0 && m % 64 == 0),
       s"candidate sizes must be positive multiples of 64, got $candMBits")
     require(k >= 1 && k <= 16, s"k must be in [1,16], got $k")
-    // Bounded-memo'd, not bare-persisted (r9 VERDICT #4): the distinct
-    // member-hash set is O(n_keys) rows — NOT tiny at scale — and a bare
-    // persist pins it MEMORY_AND_DISK for the app's life. The Memo bounds
-    // live entries (LRU, unpersist on eviction) and dedupes repeat advisor
-    // calls over the same key set.
-    val exprMd5 = graft.sources.Memo.md5Hex(
-      org.apache.spark.sql.graftglue.ColumnGlue.expression(keyHash)
-        .canonicalized.toString)
-    val memoKey = s"bloomAdvisor:$exprMd5:${graft.sources.Memo.planKey(keys)}"
-    val hs = memberHashMemo.getOrElseUpdate((keys.sparkSession, memoKey)) {
-      keys.select(keyHash.as("h")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
     val nKeys = broadcast(hs.agg(count(lit(1)).as("n_keys")))
-    val probes = keys.sparkSession.range(nProbes.toLong)
+    val probes = hs.sparkSession.range(nProbes.toLong)
       .select(graft.functions.Text.tokenHash(
         concat(lit("p"), col("id").cast("string"))).as("h"))
     val perConfig = candMBits.map { m =>

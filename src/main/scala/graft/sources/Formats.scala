@@ -136,6 +136,15 @@ object Formats {
   private def lockFor(target: String): Object =
     writeLocks.computeIfAbsent(target, _ => new Object)
 
+  /** The one write-once guard: run `write` unless `done`, checking again
+    * under `target`'s monitor so concurrent callers write exactly once. */
+  private def once(target: String)(done: => Boolean)(write: => Unit): Unit =
+    if (!done) lockFor(target).synchronized { if (!done) write }
+
+  /** Catalog name of the (purpose, input) table in this application. */
+  private def tableName(purpose: String, inDir: String): String =
+    s"graft_${purpose}_${inputTag(inDir)}".replaceAll("[^A-Za-z0-9_]", "_")
+
   /** Run `write` into `dir` only if this application hasn't already produced
     * it (presence of the Hadoop `_SUCCESS` marker). Keeps repeated plan
     * construction (warmup loops, plan-inventory tests, explain tooling)
@@ -146,9 +155,7 @@ object Formats {
   def ensureWritten(spark: SparkSession, dir: String)(write: => Unit): Unit = {
     val marker = new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) lockFor(dir).synchronized {
-      if (!fs.exists(marker)) write
-    }
+    once(dir)(fs.exists(marker))(write)
   }
 
   /** Bucketed external table for co-located joins: write `df` once per
@@ -178,11 +185,10 @@ object Formats {
     */
   def bucketedTable(spark: SparkSession, purpose: String, inDir: String,
                     df: => DataFrame, key: String, buckets: Int): DataFrame = {
-    val table = s"graft_${purpose}_${inputTag(inDir)}".replaceAll("[^A-Za-z0-9_]", "_")
-    if (!spark.catalog.tableExists(table)) lockFor(table).synchronized {
-      if (!spark.catalog.tableExists(table))
-        graft.operators.Scale.writeBucketed(df, table, key, buckets,
-          path = Some(scratchDir(spark, s"bkt_$purpose", inDir)))
+    val table = tableName(purpose, inDir)
+    once(table)(spark.catalog.tableExists(table)) {
+      graft.operators.Scale.writeBucketed(df, table, key, buckets,
+        path = Some(scratchDir(spark, s"bkt_$purpose", inDir)))
     }
     spark.table(table)
   }
@@ -203,17 +209,15 @@ object Formats {
   def partitionedBucketedTable(spark: SparkSession, purpose: String, inDir: String,
                                df: => DataFrame, partCol: String, key: String,
                                buckets: Int): DataFrame = {
-    val table = s"graft_${purpose}_${inputTag(inDir)}".replaceAll("[^A-Za-z0-9_]", "_")
-    if (!spark.catalog.tableExists(table)) lockFor(table).synchronized {
-      if (!spark.catalog.tableExists(table)) {
-        df.write.mode("overwrite")
-          .option("path", scratchDir(spark, s"pbkt_$purpose", inDir))
-          .partitionBy(partCol)
-          .bucketBy(buckets, key)
-          .sortBy(key)
-          .format("parquet")
-          .saveAsTable(table)
-      }
+    val table = tableName(purpose, inDir)
+    once(table)(spark.catalog.tableExists(table)) {
+      df.write.mode("overwrite")
+        .option("path", scratchDir(spark, s"pbkt_$purpose", inDir))
+        .partitionBy(partCol)
+        .bucketBy(buckets, key)
+        .sortBy(key)
+        .format("parquet")
+        .saveAsTable(table)
     }
     spark.table(table)
   }
@@ -242,7 +246,7 @@ object Formats {
   def appendPartitions(spark: SparkSession, purpose: String, inDir: String,
                        df: DataFrame, partCol: String, key: String,
                        buckets: Int): DataFrame = {
-    val table = s"graft_${purpose}_${inputTag(inDir)}".replaceAll("[^A-Za-z0-9_]", "_")
+    val table = tableName(purpose, inDir)
     require(spark.catalog.tableExists(table),
       s"appendPartitions: $table does not exist — create it with partitionedBucketedTable first")
     df.write.mode("append")

@@ -3,51 +3,50 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Bounded memoizer for per-(session, key) values: the shared
-  * intermediates ([[Shared]]) and the plan-keyed advisor caches
-  * (`Pipeline.bloomAdvisor`, `CountMin.joinOrderAdvisor`).
+/** A per-(session, sfDir) intermediate, built once per (session, sfDir) by
+  * `build` and read by the query keys that need it: usually several keys,
+  * but an entry may have one consumer (c96's member-hash set, c100's
+  * sketches), where it keeps repeat runs of that key cache reads. `frames`
+  * lists the DataFrames a value holds. [[SharedFrame]] is the persisted
+  * single-frame case.
   *
-  * An unbounded ConcurrentHashMap would pin cached blocks and SparkSession
-  * references for the life of the JVM; this LRU evicts beyond `maxEntries`
-  * and `release`s the evicted value (unpersisting its frames) so its
-  * storage is released. Sized for the realistic working set (a handful of
-  * (session, scale-factor) combinations), not as a general cache.
+  * Values live in an LRU of [[Shared.MaxEntries]] entries per declaration,
+  * sized for the realistic working set (a handful of (session, scale
+  * factor) combinations), not as a general cache: an unbounded map would
+  * pin cached blocks and SparkSession references for the life of the JVM.
+  * An evicted value's frames are unpersisted, so their storage is
+  * released.
   *
-  * Entries live as long as the session: the memo assumes the data behind
-  * a key is immutable for the app's life (the at-rest-layout write-once
-  * convention). A key cannot see files rewritten in place under the same
-  * path, so such a rewrite needs a new session.
-  */
-private[graft] final class Memo[V](maxEntries: Int = 8)(release: V => Unit) {
+  * Entries live as long as the session: a value assumes the data behind
+  * its sfDir is immutable for the app's life (the at-rest-layout
+  * write-once convention). A file rewritten in place under the same path
+  * needs a new session. */
+private[graft] class Shared[V](frames: V => Seq[DataFrame])(
+    build: (SparkSession, String) => V) {
   private type K = (SparkSession, String)
 
-  private def quietly(v: V): Unit = try release(v) catch { case _: Exception => () }
+  private def release(v: V): Unit =
+    try frames(v).foreach(_.unpersist()) catch { case _: Exception => () }
 
   private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-      if (size() > maxEntries) { quietly(e.getValue); true } else false
+      if (size() > Shared.MaxEntries) { release(e.getValue); true } else false
   }
 
-  def getOrElseUpdate(k: K)(f: => V): V = m.synchronized {
-    val v = m.get(k)
+  def apply(s: SparkSession, d: String): V = m.synchronized {
+    val v = m.get((s, d))
     if (v != null) v
     else {
-      val nv = f
-      m.put(k, nv)
+      val nv = build(s, d)
+      m.put((s, d), nv)
       nv
     }
   }
 }
 
-/** A per-(session, sfDir) intermediate that several query keys share: built
-  * once per (session, sfDir) by `build` and kept in a bounded [[Memo]] (LRU
-  * of 8). `frames` lists the DataFrames a value holds; eviction unpersists
-  * each. [[SharedFrame]] is the persisted single-frame case. */
-private[graft] class Shared[V](frames: V => Seq[DataFrame])(
-    build: (SparkSession, String) => V) {
-  private val memo = new Memo[V]()(v => frames(v).foreach(_.unpersist()))
-
-  def apply(s: SparkSession, d: String): V = memo.getOrElseUpdate((s, d))(build(s, d))
+private[graft] object Shared {
+  /** Live entries per declaration; the eldest beyond it is evicted. */
+  val MaxEntries = 8
 }
 
 /** A shared intermediate that is one DataFrame, persisted
@@ -60,40 +59,4 @@ private[graft] final class SharedFrame(build: (SparkSession, String) => DataFram
 
 private[graft] object SharedFrame {
   def apply(build: (SparkSession, String) => DataFrame): SharedFrame = new SharedFrame(build)
-}
-
-private[graft] object Memo {
-  /** md5 hex of a string — the one shared digest helper for memo keys
-    * (one definition, so a keying fix can never apply to half the
-    * call sites). */
-  def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  /** Collision-resistant key component for a DataFrame's plan. Built from
-    * the ANALYZED plan — the unresolved `logical` plan's toString omits
-    * exactly the identity that matters (a raw parquet read stringifies to
-    * a constant `UnresolvedDataSource … paths: 1 provided` with no path,
-    * and toString truncates projections at `maxToStringFields`), so
-    * hashing it collides across tables and scale factors. The key
-    * concatenates (a) the analyzed canonicalized plan's semanticHash —
-    * resolved structure, (b) the full output schema JSON — untruncated
-    * column identity, and (c) every file-relation's root paths collected
-    * from the plan — the table identity toString drops; the md5 of that
-    * is 128-bit. The key still identifies the PLAN, not the data:
-    * memoized entries assume the scanned input is immutable for the
-    * app's life (the at-rest-layout write-once convention); a file
-    * rewritten in place under the same path is served stale. */
-  def planKey(df: DataFrame): String = {
-    val analyzed = df.queryExecution.analyzed
-    val paths = analyzed.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.mkString(",")
-          case other => other.toString
-        }
-    }.mkString(";")
-    md5Hex(s"${analyzed.canonicalized.semanticHash()}|${analyzed.schema.json}|$paths")
-  }
 }

@@ -482,19 +482,6 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("Union"), s"c112: states must merge via union:\n$plan")
   }
 
-  test("Memo.planKey distinguishes tables, scale factors, and equal re-reads") {
-    val a = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    val b = spark.read.parquet("/root/testdata/sf0.01/customer.parquet")
-    val c = spark.read.parquet("/root/testdata/sf0.001/supplier.parquet")
-    val a2 = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    assert(graft.sources.Memo.planKey(a) != graft.sources.Memo.planKey(b),
-      "same table at different scale factors must key differently")
-    assert(graft.sources.Memo.planKey(a) != graft.sources.Memo.planKey(c),
-      "different tables must key differently")
-    assert(graft.sources.Memo.planKey(a) == graft.sources.Memo.planKey(a2),
-      "identical reads must share a key")
-  }
-
   test("random negatives: the c102 bounded-BNLJ shape with hash ranking") {
     val plan = physicalPlan(SparkEntry.queries("c108_random_negatives")(spark, sf))
     val bnlj = "BroadcastNestedLoopJoin BuildRight".r.findAllIn(plan).length

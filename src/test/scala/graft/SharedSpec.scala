@@ -11,9 +11,11 @@ class SharedSpec extends SparkSpec {
   test("warmSharedIntermediates warms every shared frame; a second call pins nothing new") {
     // c40/c36 read shared frames (embClusters, the doc shingle index) and
     // c88/c90 the two legs of the BPE pair (c88 alone never computes the
-    // corpus leg's last checkpoint); b33/b37 write at-rest layouts; c36
-    // also persists its band index inside its builder
-    val keys = SparkEntry.select(Seq("c40", "c88", "c90", "b33", "b37", "c36"))
+    // corpus leg's last checkpoint); c96 and c100 read the advisors'
+    // entries (the member-hash set, the three sketches), so a second pass
+    // over them reuses what the first cached; b33/b37 write at-rest
+    // layouts; c36 also persists its band index inside its builder
+    val keys = SparkEntry.select(Seq("c40", "c88", "c90", "c96", "c100", "b33", "b37", "c36"))
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     assert(Bench.warm(spark, keys, sf) == Seq.empty)
